@@ -3,7 +3,7 @@
 
 SF ?= /root/testdata/sf0.001
 
-.PHONY: test test-distinct oracle oracle-vanilla bench plans pipeline dashboard unit recall-check concurrent assembly lakehouse datamart ann-audit
+.PHONY: test test-distinct oracle oracle-vanilla oracle-sf01 bench perfbench plans pipeline dashboard unit recall-check concurrent assembly lakehouse datamart ann-audit
 
 # reference `make test` (Makefile:22-24): canary count round trip
 test:
@@ -36,6 +36,11 @@ oracle-sf01:
 # reference `make benchmark` (Makefile:30-32)
 bench:
 	python bench.py
+
+# one short run of the gated benchmark's dashboard workload (the
+# workloads and metrics are declared in BENCHMARK.json)
+perfbench:
+	python3 perfbench/run.py --workload dashboard --seed 1 --seconds 5 --trace 0
 
 # recall floors for every approximate operator (CI gate)
 recall-check:

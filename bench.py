@@ -298,30 +298,56 @@ def main() -> None:
     # Compact summary: the driver stores only the LAST ~2000 chars of
     # stdout and parses the final JSON line, so this line must stay
     # small — per-query means + per-query mins (r17), everything else
-    # lives in the file. All pre-r17 fields are byte-compatible; if a
-    # pathological run would overflow the tail window, ``mins`` alone
-    # is dropped (the full blob always carries it).
+    # lives in the file. All pre-r17 fields are byte-compatible.
+    print(
+        compact_line(
+            value=total,
+            queries=results,
+            mins=mins,
+            total_min=full["total_min"],
+            burst_speedup=burst["speedup"],
+            burst_equal=burst["results_equal"],
+            load1_start=load_samples["start"][0],
+            full=os.path.basename(full_path),
+        )
+    )
+
+
+def compact_line(
+    *,
+    value: float,
+    queries: dict[str, float],
+    mins: dict[str, float],
+    total_min: float,
+    burst_speedup: float,
+    burst_equal: bool,
+    load1_start: float,
+    full: str,
+) -> str:
+    """The compact summary JSON line printed last on stdout. If it
+    would exceed COMPACT_LINE_MAX, ``mins`` alone is dropped (the full
+    blob always carries it), so the pre-r17 fields always fit."""
     compact = {
         "metric": "headline_queries_total_mean_sec",
-        "value": total,
+        "value": value,
         "unit": "sec",
-        "queries": results,
+        "queries": queries,
         # min-of-reps across BOTH run orders: tracks plan cost, not
         # box load — the r16 verdict's de-noising ask
         "mins": mins,
-        "total_min": full["total_min"],
-        "burst_speedup": burst["speedup"],
-        "burst_equal": burst["results_equal"],
-        "load1_start": load_samples["start"][0],
+        "total_min": total_min,
+        "burst_speedup": burst_speedup,
+        "burst_equal": burst_equal,
+        "load1_start": load1_start,
         "sf": SF_DIR,
         "reps": REPS,
-        "full": os.path.basename(full_path),
+        "full": full,
     }
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) > COMPACT_LINE_MAX:
         del compact["mins"]
         line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    return line
 
 
 if __name__ == "__main__":

@@ -314,29 +314,7 @@ def main() -> None:
         ).collect()
         print(f"[21] filtered-MV containment rewrite: {eng.last_mv_rewrite}")
 
-        # 22. TOP-K file pushdown (round 15): the reference's flagship
-        # artifact ends in ORDER BY 2 DESC LIMIT 200 — on a table
-        # clustered by the sort column the static k-bound visits only
-        # the files that can contribute
-        tkp = f"{tmp}/orders_tk"
-        (
-            orders.repartitionByRange(8, "o_orderkey")
-            .sortWithinPartitions("o_orderkey")
-            .write.mode("overwrite")
-            .parquet(tkp)
-        )
-        write_zonemap(spark, tkp, ["o_orderkey"])
-        eng.register("orders_tk", tkp)
-        eng.df(
-            "SELECT o_orderkey, o_totalprice FROM orders_tk "
-            "ORDER BY o_orderkey DESC LIMIT 10"
-        ).collect()
-        print(
-            f"[22] top-k file pushdown: "
-            f"{(eng.last_zonemap_report.get('orders_tk') or {}).get('topk')}"
-        )
-
-        # 23. COMPOSITE slice keys (round 15): GROUP BY over TWO
+        # 22. COMPOSITE slice keys (round 15): GROUP BY over TWO
         # columns where neither clusters — per-(file, a, b) slice rows
         # answer at zero files scanned
         gsp2 = f"{tmp}/orders_gs2"
@@ -350,9 +328,9 @@ def main() -> None:
             "SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n "
             "FROM orders_gs2 GROUP BY 1, 2"
         ).collect()
-        print(f"[23] composite-key slice pushdown: {eng.last_agg_plan}")
+        print(f"[22] composite-key slice pushdown: {eng.last_agg_plan}")
 
-        # 24. MV lifecycle across maintenance (round 15): optimize the
+        # 23. MV lifecycle across maintenance (round 15): optimize the
         # MV's source — the hook marks the MV and the next query
         # self-refreshes it, so the rewrite stays alive with no manual
         # refresh call
@@ -362,7 +340,7 @@ def main() -> None:
             "SELECT trunc(o_orderdate,'month') AS m, COUNT(*) AS n "
             "FROM orders_plain GROUP BY 1"
         ).collect()
-        print(f"[24] MV alive after optimize (self-refreshed): {eng.last_mv_rewrite}")
+        print(f"[23] MV alive after optimize (self-refreshed): {eng.last_mv_rewrite}")
 
 
 if __name__ == "__main__":

@@ -76,7 +76,6 @@ class Engine:
         self._view_epoch = 0
         self.last_zonemap_report: dict[str, dict] = {}
         self.last_agg_plan: dict | None = None
-        self.last_star_plan: dict | None = None
         self.last_mv_rewrite: dict | None = None
         self.last_result_cache: dict | None = None
         # guards the zone-map rebind window: temp views are
@@ -269,11 +268,23 @@ class Engine:
     def _sql_planned_report(
         self, query: str, snap_cache: dict | None = None
     ) -> tuple[DataFrame, dict]:
-        """``spark.sql`` + automatic zone-map file skipping + estimate-
-        driven broadcast hints. Returns ``(df, telemetry)`` — callers
-        needing the report read the RETURN VALUE (the shared
-        ``last_zonemap_report`` attribute is best-effort under
-        concurrency; results themselves are lock-protected).
+        """``spark.sql`` plus the engine's metadata rewrites, tried in
+        this order:
+
+        1. aggregate pushdown (plans/agg_pushdown.py): a scalar or
+           grouped COUNT/MIN/MAX/SUM/AVG over one zone-mapped table
+           answers from the manifest plus its boundary files;
+        2. materialized-view rewrite (plans/mv_rewrite.py): an
+           aggregate re-plans over a fresh MV's partials;
+        3. zone-map file skipping (plans/zonemap_pushdown.py), with
+           dynamic file pruning and a semijoin row filter derived from
+           join dimensions, and estimate-driven broadcast hints.
+
+        Every other shape runs on Spark's native plan. Returns ``(df,
+        telemetry)`` — callers needing the report read the RETURN
+        VALUE (the shared ``last_zonemap_report`` attribute is
+        best-effort under concurrency; results themselves are
+        lock-protected).
         ``snap_cache`` is the per-CALL snapshot memo shared with the
         result-cache probe so MV freshness checks never repeat a
         table's directory walk within one query.
@@ -333,10 +344,6 @@ class Engine:
                 except Exception:
                     agg = None  # exactness gate failed somewhere: run plain
             self.last_agg_plan = agg[1] if agg is not None else None
-            # reset here so a query answered by the AGG branch (which
-            # returns before the star attempt) never leaves a stale
-            # star report from an earlier query
-            self.last_star_plan = None
             if agg is not None:
                 frame, tele = agg
                 # files_read/files_total keep the classic report
@@ -347,28 +354,6 @@ class Engine:
                         "files_read": tele["files_scanned"],
                         "files_total": tele["files_total"],
                         "agg_pushdown": tele,
-                    }
-                }
-            # star-join grouped pushdown (r16): fact JOIN small dim,
-            # GROUP BY dim attribute — per-(file, join-key) slice
-            # partials fold to a bounded key->partials table, the dim
-            # side evaluates once (the DPP subquery), and the join +
-            # aggregate happen driver-side at metadata cost with ZERO
-            # fact files scanned (plans/star_pushdown.py's gates)
-            star = None
-            if zm_tables:
-                try:
-                    star = self._try_star_pushdown(df, zm_tables)
-                except Exception:
-                    star = None  # exactness gate failed: run plain
-            self.last_star_plan = star[1] if star is not None else None
-            if star is not None:
-                frame, tele = star
-                return frame, {
-                    tele["table"]: {
-                        "files_read": 0,
-                        "files_total": tele["files_total"],
-                        "star_pushdown": tele,
                     }
                 }
             # materialized-view rewrite: an aggregate the manifest
@@ -398,28 +383,8 @@ class Engine:
                 )
             except Exception:
                 return df, {}  # plan-shape drift: pushdown is best-effort
-            # top-k file pushdown (raw-column ORDER BY col LIMIT k —
-            # the scan-shaped sibling of the reference's flagship
-            # grouped top-k, whose Sort/Limit-over-Aggregate form the
-            # agg pushdown above already answers): when the WHOLE plan
-            # is Limit-Sort-[Filter]-Relation over one zone-mapped
-            # table, the manifest's min/max bound which files can
-            # contribute to the top k — see plans/topk_pushdown.py for
-            # the static-bound argument. The extraction shape
-            # guarantees a single scan and no joins, so it composes
-            # with (and subsumes) the generic WHERE pruning.
-            topk = None
-            try:
-                from quack_reduce_spark.plans import topk_pushdown as _tk
-
-                topk = _tk.extract_topk(
-                    df, {n: p for n, (p, _) in zm_tables.items()}
-                )
-            except Exception:
-                topk = None
         rebinds: dict[str, tuple[list[str], int, dict]] = {}
         dpp_applied: dict[str, dict] = {}
-        topk_applied: dict[str, dict] = {}
         try:
             # dynamic file pruning from join dimensions: a star query
             # filtering only the dim side derives the surviving join-
@@ -446,19 +411,6 @@ class Engine:
                 got = _zp.plan_pruned_files(self.spark, path, cols, scans)
                 if got is not None:
                     rebinds[name] = got
-            if topk is not None and topk["table"] in zm_tables:
-                from quack_reduce_spark.plans import topk_pushdown as _tk
-
-                tname = topk["table"]
-                tpath, tcols = zm_tables[tname]
-                tk_got = _tk.plan_topk_files(self.spark, tpath, tcols, topk)
-                if tk_got is not None:
-                    files, total, stats, tk_tele = tk_got
-                    # the bound's survivor set already re-applies the
-                    # exact WHERE classification, so it is a subset of
-                    # (and replaces) the generic conjunct pruning
-                    rebinds[tname] = (files, total, stats)
-                    topk_applied[tname] = tk_tele
             smj_tables = _zp.join_scan_tables(
                 df, {n: p for n, (p, _) in zm_tables.items()}
             )
@@ -555,8 +507,6 @@ class Engine:
                 report[name]["dpp"] = dpp_applied[name]
             if name in row_applied:
                 report[name]["dpp_row_filter"] = row_applied[name]
-            if name in topk_applied:
-                report[name]["topk"] = topk_applied[name]
         return planned, report
 
     @staticmethod
@@ -699,30 +649,6 @@ class Engine:
         return _ap.build_agg_frame(
             self.spark, path, info, rows, total, group_stats
         )
-
-    def _try_star_pushdown(
-        self, df: DataFrame, zm_tables: dict[str, tuple[str, list[str]]]
-    ) -> tuple[DataFrame, dict] | None:
-        """Star-join grouped aggregate pushdown: when the planned
-        query is EXACTLY ``fact INNER JOIN dim ON one equi key, GROUP
-        BY bare dim attributes, COUNT/SUM/MIN/MAX/AVG over bare fact
-        columns`` with every fact conjunct exactly understood
-        (plans/star_pushdown.py's gates), answer it from the fact
-        manifest's per-(file, join-key) slice partials merged
-        driver-side with the evaluated dim rows — zero fact files
-        scanned. None -> the caller runs the plain plan (accelerator,
-        never a semantics change)."""
-        from quack_reduce_spark.plans import star_pushdown as _sp
-
-        paths = {n: p for n, (p, _) in zm_tables.items()}
-        for info in _sp.extract_star_group(df, paths):
-            if info["table"] not in zm_tables:
-                continue
-            path, zcols = zm_tables[info["table"]]
-            got = _sp.build_star_frame(self.spark, df, path, zcols, info)
-            if got is not None:
-                return got
-        return None
 
     def table_stats(self, name: str) -> dict:
         """ANALYZE-style statistics for a registered zone-mapped table,
@@ -1311,7 +1237,6 @@ class Engine:
                             # LRU touch
                             self._results.pop(cache_key, None)
                             self._results[cache_key] = hit
-                    RESULT_CACHE_COUNTS["hits"] += 1
                     self.last_result_cache = {"hit": True}
                     self._was_warm = True
                     return QueryResult(
@@ -1351,6 +1276,13 @@ class Engine:
         names: tuple | None = None
         if cache_key is not None and len(records) <= RESULT_CACHE_MAX_ROWS:
             names = self._scope_names(df)
+            if names is not None:
+                # a metadata-answered frame (manifest COUNT(*), a
+                # contained range) reads no file of the table it
+                # answers for, so the plan walk alone would scope it
+                # to nothing and no commit could invalidate it; the
+                # rewrite report names that table
+                names = tuple(sorted(set(names) | set(zm_report)))
             if names is not None and all(
                 pre_tokens.get(n) is not None for n in names
             ):
@@ -1362,7 +1294,6 @@ class Engine:
             # the plan read (single triples concatenate in sorted-name
             # order, the same order _snap_token re-derives on probe)
             token = tuple(pre_tokens[n][0] for n in names)
-            RESULT_CACHE_COUNTS["misses"] += 1
             stored = True
             with self._results_lock:
                 prev = self._results.pop(cache_key, None)
@@ -1381,7 +1312,6 @@ class Engine:
                 ):
                     oldest = next(iter(self._results))
                     self._results_bytes -= self._results.pop(oldest)[3]
-                RESULT_CACHE_COUNTS["bytes"] = self._results_bytes
         self.last_result_cache = {
             "hit": False, "stored": stored, "bytes": nbytes,
             "cache_bytes": self._results_bytes,
@@ -2669,7 +2599,7 @@ _FIXED_WIDTHS = None
 # manifest-backed sides run ZERO of these).
 ANALYZE_COUNTS = {"side_scans": 0}
 
-# Result-cache bounds + observability (tests assert hit/miss behavior).
+# Result-cache bounds.
 # MAX_ROWS guards the uncapped (limit=None) surface: the envelope
 # already materialized the records once, but the cache would pin up to
 # RESULT_CACHE_MAX copies of them
@@ -2680,7 +2610,6 @@ RESULT_CACHE_MAX_ROWS = 10_000
 # pin GBs of driver heap; a single result above the budget is never
 # stored
 RESULT_CACHE_MAX_BYTES = 64 * 1024 * 1024
-RESULT_CACHE_COUNTS = {"hits": 0, "misses": 0, "bytes": 0}
 
 # Incremental MV refresh records the build-time file listing up to
 # this many files; beyond it (or when listing fails) refreshes fall

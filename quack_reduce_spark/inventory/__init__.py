@@ -97,11 +97,10 @@ _HEAD = [
     "dedup_lsh_index_probe",
     "sim_cosine_topk",
     "graph_triangles",
-    # Code changed/new this round (r16): monotone-expression top-k
-    # sort keys (extended key), predicate-MV incremental refresh
+    # Code changed/new in r16: predicate-MV incremental refresh
     # (extended key), the InSubquery result-cache fix, the
-    # parallelized ml_auc_rank rank stage, and the shared slice
-    # machinery the star pushdown composes over
+    # parallelized ml_auc_rank rank stage. The top-k and star keys
+    # now run on Spark's native plan and stay as differential coverage
     "lake_topk_pushdown",
     "lake_star_group_pushdown",
     "lake_mv_filtered",

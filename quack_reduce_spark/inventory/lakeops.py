@@ -2058,21 +2058,15 @@ def lake_group_agg_multikey_unclustered(
 
 
 def lake_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k FILE pushdown from manifest stats (r15, VERDICT r14 #2)
-    — the scan-shaped sibling of the reference's flagship artifact
-    (``top_pickup_locations.sql:8-9`` is ``ORDER BY 2 DESC LIMIT 200``
-    over a GROUP BY, which the aggregate pushdown already answers from
-    metadata): for a raw-column ``ORDER BY col DESC/ASC LIMIT k`` on a
-    table CLUSTERED by the sort column, the engine visits files in
-    manifest min/max order and skips every file the static k-bound
-    proves cannot contribute (see plans/topk_pushdown.py). In-query
-    gates: the DESC top-k reads <=2 of the 8 files; the ASC + WHERE
-    composition also reads a strict subset; an UNCLUSTERED copy
-    declines (no ``topk`` telemetry) but stays exact. r16 monotone
-    sort-expression gates: ``date_trunc('month', d) DESC`` prunes
-    through the truncation chain, ``-key ASC`` prunes via the flipped
-    bound, ``abs(key)`` declines. The DuckDB oracle recomputes every
-    variant from the raw fixture."""
+    """Raw-column ``ORDER BY col DESC/ASC LIMIT k`` through
+    ``Engine.df`` over zone-mapped tables — the scan-shaped sibling of
+    the reference's flagship artifact (``top_pickup_locations.sql:8-9``
+    is ``ORDER BY 2 DESC LIMIT 200`` over a GROUP BY). The shape runs
+    on Spark's native plan (TakeOrderedAndProject); the key is kept as
+    differential coverage of the engine path over a clustered copy, an
+    UNCLUSTERED copy, monotone sort expressions (``date_trunc``,
+    negation) and a non-monotone one (``abs``). The DuckDB oracle
+    recomputes every variant from the raw fixture."""
     import uuid as _uuid
 
     from quack_reduce_spark.engine import Engine
@@ -2095,23 +2089,11 @@ def lake_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ORDER BY o_orderkey DESC LIMIT 8"
     )
     rows1 = [(r["o_orderkey"], r["o_custkey"]) for r in d1.collect()]
-    rep1 = (eng.last_zonemap_report.get(t) or {}).get("topk")
-    _require(
-        rep1 is not None and rep1["files_read"] < rep1["files_total"]
-        and rep1["files_read"] <= 2,
-        "DESC top-k did not prune by the k-bound", rep1,
-    )
     d2 = eng.df(
         f"SELECT o_orderkey, o_custkey FROM {t} WHERE o_orderkey >= 500 "
         f"ORDER BY o_orderkey ASC LIMIT 6"
     )
     rows2 = [(r["o_orderkey"], r["o_custkey"]) for r in d2.collect()]
-    rep2 = (eng.last_zonemap_report.get(t) or {}).get("topk")
-    _require(
-        rep2 is not None and rep2["files_read"] < rep2["files_total"],
-        "ASC+WHERE top-k did not prune", rep2,
-    )
-    # unclustered copy: the bound skips nothing -> decline, still exact
     path_u = _fresh_dir(sf_dir, "lake_topk_u")
     orders.repartition(6).write.mode("overwrite").parquet(path_u)
     Z.write_zonemap(spark, path_u, ["o_orderkey"])
@@ -2122,14 +2104,6 @@ def lake_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ORDER BY o_orderkey DESC LIMIT 4"
     )
     rows3 = [(r["o_orderkey"], r["o_custkey"]) for r in d3.collect()]
-    rep3 = (eng.last_zonemap_report.get(tu) or {}).get("topk")
-    _require(rep3 is None, "unclustered top-k must decline", rep3)
-    # r16 (VERDICT r15 #4): MONOTONE-EXPRESSION sort keys. (a)
-    # date_trunc('month', d) is order-preserving over a table
-    # clustered by the raw DATE column — the bound pushes the file
-    # min/max through the truncation and still skips files; (b) unary
-    # negation is order-REVERSING: -key ASC is key DESC, answered by
-    # the flipped bound; (c) a NON-monotone expression (abs) declines.
     path_d = _fresh_dir(sf_dir, "lake_topk_d")
     (
         orders.repartitionByRange(8, "o_orderdate")
@@ -2146,31 +2120,16 @@ def lake_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"LIMIT 6"
     )
     rows4 = [(r["o_orderkey"], r["o_custkey"]) for r in d4.collect()]
-    rep4 = (eng.last_zonemap_report.get(td) or {}).get("topk")
-    _require(
-        rep4 is not None
-        and rep4["files_read"] < rep4["files_total"]
-        and "sort_expr_steps" in rep4,
-        "date_trunc top-k did not prune via the monotone chain", rep4,
-    )
     d5 = eng.df(
         f"SELECT o_orderkey, o_custkey FROM {t} "
         f"ORDER BY -o_orderkey ASC LIMIT 5"
     )
     rows5 = [(r["o_orderkey"], r["o_custkey"]) for r in d5.collect()]
-    rep5 = (eng.last_zonemap_report.get(t) or {}).get("topk")
-    _require(
-        rep5 is not None and rep5.get("order_reversing") is True
-        and rep5["files_read"] <= 2,
-        "negated-key top-k did not flip the bound", rep5,
-    )
     d6 = eng.df(
         f"SELECT o_orderkey, o_custkey FROM {t} "
         f"ORDER BY abs(o_orderkey) DESC, o_orderkey DESC LIMIT 4"
     )
     rows6 = [(r["o_orderkey"], r["o_custkey"]) for r in d6.collect()]
-    rep6 = (eng.last_zonemap_report.get(t) or {}).get("topk")
-    _require(rep6 is None, "non-monotone sort expression must decline", rep6)
     spark.catalog.dropTempView(t)
     spark.catalog.dropTempView(tu)
     spark.catalog.dropTempView(td)
@@ -2193,19 +2152,16 @@ def lake_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lake_star_group_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-join grouped aggregate pushdown (r16, VERDICT r15 #3):
-    ``fact JOIN small dim ON one equi key, GROUP BY dim attribute``
-    answered with ZERO fact files scanned — the fact manifest's
-    per-(file, join-key) slice partials fold to a bounded key->partial
-    table, the dim side evaluates once (the DPP subquery), and the
-    join + aggregate happen driver-side (plans/star_pushdown.py). The
-    TPC-H q3/q5 star shape the single-table agg pushdown could not
-    reach. In-query gates: the star query reports ``files_scanned ==
-    0`` with slice-resolved files on an UNCLUSTERED 5-file fact; a
-    NON-EQUI join declines (no star telemetry); a MULTI-DIM chain
-    (fact ⋈ nation ⋈ region) declines. The DuckDB oracle recomputes
-    all three from the raw fixture. Reference: quack-reduce executes
-    every such dashboard query as a full DuckDB scan (app.py:51)."""
+    """Star-join grouped aggregates through ``Engine.df`` — ``fact
+    JOIN small dim ON one equi key, GROUP BY dim attribute`` over a
+    zone-mapped UNCLUSTERED fact carrying per-(file, join-key) slices:
+    the TPC-H q3/q5 dashboard shape. It runs on Spark's native plan;
+    the key is kept as differential coverage of the engine path for an
+    equi star, a NON-EQUI join, a MULTI-DIM chain (fact ⋈ nation ⋈
+    region) and a mixed dim + fact grouping over composite slices. The
+    DuckDB oracle recomputes all four from the raw fixture. Reference:
+    quack-reduce executes every such dashboard query as a full DuckDB
+    scan (app.py:51)."""
     import uuid as _uuid
 
     from quack_reduce_spark.engine import Engine
@@ -2232,21 +2188,11 @@ def lake_star_group_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"GROUP BY n_name ORDER BY n_name"
     )
     rows1 = [(r["n_name"], r["n"], r["s"], r["m"]) for r in d1.collect()]
-    tele = eng.last_star_plan
-    _require(
-        tele is not None and tele["files_scanned"] == 0
-        and tele["files_group_stats"] > 0,
-        "star query did not answer from slice metadata", tele,
-    )
     d2 = eng.df(
         f"SELECT n_name, COUNT(*) AS n FROM {tf} JOIN {td} "
         f"ON c_nationkey < n_nationkey GROUP BY n_name ORDER BY n_name"
     )
     rows2 = [(r["n_name"], r["n"]) for r in d2.collect()]
-    _require(
-        eng.last_star_plan is None, "non-equi join must decline",
-        eng.last_star_plan,
-    )
     d3 = eng.df(
         f"SELECT r_name, COUNT(*) AS n FROM {tf} "
         f"JOIN {td} ON c_nationkey = n_nationkey "
@@ -2254,21 +2200,14 @@ def lake_star_group_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"GROUP BY r_name ORDER BY r_name"
     )
     rows3 = [(r["r_name"], r["n"]) for r in d3.collect()]
-    _require(
-        eng.last_star_plan is None, "multi-dim star must decline",
-        eng.last_star_plan,
-    )
-    # r16 mixed grouping: a dim attribute AND a fact column — the
-    # fact key pins through a COMPOSITE slice (c_nationkey,
-    # c_mktsegment), still zero fact files scanned
+    # mixed grouping: a dim attribute AND a fact column, over a fact
+    # carrying COMPOSITE (c_nationkey, c_mktsegment) slices
     path_m = _fresh_dir(sf_dir, "lake_star_m")
     cust.repartition(5).write.mode("overwrite").parquet(path_m)
     # the composite key space is bounded by the schema (25 nations x 5
     # segments = 125 combos), not by the row count — size the per-file
     # slice cap to it, else every file of a >=sf0.01 fixture exceeds
-    # the 64-entry default and is excluded wholesale (r16 fix: the
-    # interrupted build had only been verified at sf0.001, where the
-    # small files stay under the default cap)
+    # the 64-entry default and is excluded wholesale
     Z.write_zonemap(
         spark, path_m, ["c_custkey", "c_nationkey", "c_mktsegment"],
         group_stats_cols=["c_nationkey,c_mktsegment"],
@@ -2284,12 +2223,6 @@ def lake_star_group_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows4 = [
         (f"{r['c_mktsegment']}/{r['n_name']}", r["n"]) for r in d4.collect()
     ]
-    tele4 = eng.last_star_plan
-    _require(
-        tele4 is not None and tele4["files_scanned"] == 0
-        and tele4.get("group_stats_col") == "c_nationkey,c_mktsegment",
-        "mixed-key star did not answer from composite slices", tele4,
-    )
     for t in (tf, td, tr, tm):
         spark.catalog.dropTempView(t)
     shutil.rmtree(path, ignore_errors=True)
@@ -2793,9 +2726,6 @@ ORACLES["lake_group_agg_multikey_unclustered"] = """
     FROM orders o GROUP BY 1, 2 ORDER BY st, pr
 """
 
-# the k-bound file skipping must be invisible: every variant
-# recomputes from the raw fixture with the same deterministic
-# (unique-key) ordering
 ORACLES["lake_star_group_pushdown"] = """
     SELECT 'star' AS q, n_name AS name, n, s, m FROM (
         SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n,
@@ -2822,6 +2752,8 @@ ORACLES["lake_star_group_pushdown"] = """
         GROUP BY c_mktsegment, n_name)
 """
 
+# every variant recomputes from the raw fixture with the same
+# deterministic (unique-key) ordering
 ORACLES["lake_topk_pushdown"] = """
     SELECT 'desc8' AS q, o_orderkey, o_custkey FROM (
         SELECT o_orderkey, o_custkey FROM orders

@@ -6,14 +6,15 @@ Round-8 fix for a two-round telemetry outage: BENCH_r06/r07 recorded
 mins, heavy_ab, load, concurrent_burst — pushed it past 4 KB). The
 full blob now goes to ``bench_full.json``; stdout's final line is a
 compact summary. These tests pin that contract WITHOUT running the
-(minutes-long) bench itself: they rebuild the compact dict exactly as
-``bench.main`` serializes it and bound its size with worst-case-width
-numbers.
+(minutes-long) bench itself: they feed worst-case-width numbers through
+``bench.compact_line``, the helper ``bench.main`` prints with, and
+bound the line's size.
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 import bench
 
@@ -30,23 +31,18 @@ TAIL_WINDOW = 2000
 BUDGET = bench.COMPACT_LINE_MAX
 
 
-def _compact_line(per_query: dict[str, float], mins: dict[str, float] | None = None) -> str:
-    # mirror of bench.main's final print — field-for-field
-    compact = {
-        "metric": "headline_queries_total_mean_sec",
-        "value": 99999.999,
-        "unit": "sec",
-        "queries": per_query,
-        "mins": per_query if mins is None else mins,
-        "total_min": 99999.999,
-        "burst_speedup": 99.99,
-        "burst_equal": False,
-        "load1_start": 99.99,
-        "sf": "/root/testdata/sf0.1",
-        "reps": 3,
-        "full": "bench_full.json",
-    }
-    return json.dumps(compact, separators=(",", ":"))
+def _compact_line(per_query: dict[str, float]) -> str:
+    # worst-case-width numbers through the same helper bench.main prints
+    return bench.compact_line(
+        value=99999.999,
+        queries=per_query,
+        mins=per_query,
+        total_min=99999.999,
+        burst_speedup=99.99,
+        burst_equal=False,
+        load1_start=99.99,
+        full="bench_full.json",
+    )
 
 
 def test_compact_line_fits_tail_window():
@@ -57,6 +53,7 @@ def test_compact_line_fits_tail_window():
         f"budget (driver tail window {TAIL_WINDOW}); trim fields or "
         "move more detail into bench_full.json"
     )
+    assert "mins" in json.loads(line)  # fits without the fallback
 
 
 def test_compact_line_is_parseable_and_has_driver_fields():
@@ -70,36 +67,45 @@ def test_compact_line_is_parseable_and_has_driver_fields():
     assert set(parsed["mins"]) == set(bench.HEADLINE)
 
 
-def test_headline_growth_headroom():
-    # ten more headline queries at worst-case name width must still
-    # produce a line that fits AFTER the runtime mins-dropping guard —
-    # growth can cost the new mins field, never the pre-r17 contract
+def _padded() -> dict[str, float]:
+    # ten more headline queries at worst-case name width
     padded = {k: 999.999 for k in bench.HEADLINE}
     for i in range(10):
         padded[f"future_round_added_query_number_{i:02d}"] = 999.999
-    compact = json.loads(_compact_line(padded))
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > bench.COMPACT_LINE_MAX:
-        del compact["mins"]
-        line = json.dumps(compact, separators=(",", ":"))
+    return padded
+
+
+def test_headline_growth_headroom():
+    # growth must still produce a line that fits AFTER the runtime
+    # mins-dropping guard — growth can cost the new mins field, never
+    # the pre-r17 contract
+    padded = _padded()
+    line = _compact_line(padded)
     assert len(line) <= TAIL_WINDOW
     assert set(json.loads(line)["queries"]) == set(padded)
 
 
 def test_overflow_drops_only_mins():
     # the runtime guard: a line past COMPACT_LINE_MAX loses mins and
-    # nothing else — replicate bench.main's fallback field-for-field
-    compact = json.loads(_compact_line({k: 999.999 for k in bench.HEADLINE}))
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > bench.COMPACT_LINE_MAX:
-        del compact["mins"]
-        line = json.dumps(compact, separators=(",", ":"))
-    parsed = json.loads(line)
-    for field in ("metric", "value", "unit", "queries", "total_min", "sf"):
+    # nothing else
+    padded = _padded()
+    full = json.dumps(
+        {"queries": padded, "mins": padded}, separators=(",", ":")
+    )
+    assert len(full) > bench.COMPACT_LINE_MAX  # the guard must fire
+    parsed = json.loads(_compact_line(padded))
+    assert "mins" not in parsed
+    for field in (
+        "metric", "value", "unit", "queries", "total_min", "burst_speedup",
+        "burst_equal", "load1_start", "sf", "reps", "full",
+    ):
         assert field in parsed
 
 
 def test_load_gate_defaults():
-    # the r17 load gate: documented defaults stay wired to the env knobs
-    assert bench.LOAD_GATE == 2.5
-    assert bench.LOAD_WAIT == 60.0
+    # the r17 load gate: documented defaults stay wired to the env
+    # knobs — a knob set in the environment overrides its default
+    gate = os.environ.get("SPARK_GRAFT_BENCH_LOAD_GATE", "2.5")
+    wait = os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT", "60")
+    assert bench.LOAD_GATE == float(gate)
+    assert bench.LOAD_WAIT == float(wait)

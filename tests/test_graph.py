@@ -90,6 +90,38 @@ def test_checkpoint_bounds_plan_depth_and_keeps_answer(spark):
     assert len(ckpt_plan) * 2 < len(lazy_plan)
 
 
+def test_pagerank_checkpoint_interval_does_not_change_ranks(spark, sf_dir):
+    """Per-iteration lineage truncation (checkpoint_every=1) produces
+    the same ranks as the untruncated plan on the registry query's
+    supplier -> customer graph."""
+    import pyspark.sql.functions as F
+
+    from quack_reduce_spark.inventory._util import load
+
+    edges = (
+        load(spark, sf_dir, "lineitem")
+        .join(
+            load(spark, sf_dir, "orders"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .select(
+            F.col("l_suppkey").alias("src"),
+            (F.col("o_custkey") + F.lit(1_000_000)).alias("dst"),
+        )
+        .distinct()
+    )
+    fast = pagerank(edges, iters=3, checkpoint_every=1)
+    slow = pagerank(edges, iters=3, checkpoint_every=0)
+    f = {r["node"]: r["rank"] for r in fast.collect()}
+    s = {r["node"]: r["rank"] for r in slow.collect()}
+    # a tolerance, not exact float equality: the two physical plans may
+    # sum double contributions in different shuffle-fetch orders; the
+    # contract is the rounded-7 rank the oracle hashes, so 1e-12 is far
+    # stricter than needed while immune to last-ulp reassociation
+    assert set(f) == set(s)
+    assert all(abs(f[n] - s[n]) < 1e-12 for n in f)
+
+
 # ---------------------------------------------------------------- BFS
 
 from quack_reduce_spark.operators.bfs import bfs_levels, undirect

@@ -611,3 +611,49 @@ def test_group_stats_append_clean_path_skips_repair(spark, sf_dir, tmp_path):
     )
     assert sorted(map(tuple, d.collect())) == want
     spark.catalog.dropTempView("gs11")
+
+
+def test_group_stats_composite_slices_follow_group_stats_max(spark, tmp_path):
+    """A composite slice column whose PER-FILE distinct-combination
+    count exceeds group_stats_max is excluded wholesale: the grouped
+    pushdown then scans that file (still exact), and a cap sized to the
+    bounded key space restores the zero-scan answer from slices."""
+    # 1 file x 600 rows covering 25x7 = 175 combos (> the 64 default;
+    # coprime moduli so the two key parts are independent)
+    fact = spark.range(600).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 25).cast("int").alias("nk"),
+        F.concat(F.lit("seg"), (F.col("id") % 7)).alias("seg"),
+    )
+    q = "SELECT seg, nk, COUNT(*) AS n, SUM(k) AS s FROM {f} GROUP BY seg, nk"
+
+    def run(cap):
+        p = str(tmp_path / f"fact_{cap}")
+        fact.coalesce(1).write.parquet(p)
+        Z.write_zonemap(
+            spark, p, ["k", "nk", "seg"],
+            group_stats_cols=["nk,seg"], group_stats_max=cap,
+        )
+        entries = Z.group_stats_config(p)["nk,seg"]["entries"]
+        eng = Engine(spark=spark, result_cache=False)
+        eng.register(f"gsm_{cap}", p)
+        rows = sorted(map(tuple, eng.df(q.format(f=f"gsm_{cap}")).collect()))
+        spark.catalog.dropTempView(f"gsm_{cap}")
+        return rows, entries, eng.last_agg_plan
+
+    rows_default, entries_default, tele_default = run(64)
+    assert entries_default == 0  # over-cap: the file is excluded
+    assert tele_default is not None and tele_default["files_scanned"] == 1
+    rows_sized, entries_sized, tele_sized = run(256)
+    assert entries_sized > 0
+    assert tele_sized is not None and tele_sized["files_scanned"] == 0
+    assert tele_sized["group_stats_col"] == "nk,seg"
+    want = sorted(
+        map(
+            tuple,
+            fact.groupBy("seg", "nk")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("s"))
+            .collect(),
+        )
+    )
+    assert rows_default == rows_sized == want

@@ -314,6 +314,59 @@ def test_result_cache_literal_query_needs_no_tables(spark, sf_dir, tmp_path):
     spark.catalog.dropTempView("orders")
 
 
+def test_result_cache_metadata_answer_invalidates_on_append(
+    spark, sf_dir, tmp_path
+):
+    """A manifest-answered aggregate reads no file: ``COUNT(*)`` and a
+    range count the manifest proves empty plan to literal rows. Their
+    cache entries must still be scoped to the table they answer for,
+    so an append + manifest maintenance + re-register serves the new
+    answer, while a repeat without a commit keeps hitting."""
+    import pyspark.sql.functions as F
+
+    from quack_reduce_spark.operators import zonemaps as Z
+
+    orders = load(spark, sf_dir, "orders")
+    src = str(tmp_path / "rc14")
+    eng = Engine(spark=spark)
+    eng.write_clustered(orders, src, ["o_orderkey"], n_files=4)
+    eng.register("rc14", src)
+    hi = orders.agg(F.max("o_orderkey")).first()[0]
+    q_all = "SELECT COUNT(*) AS n FROM rc14"
+    q_new = f"SELECT COUNT(*) AS n FROM rc14 WHERE o_orderkey > {hi}"
+    r_all = eng.sql(q_all)
+    n0 = r_all.records[0]["n"]
+    r_new = eng.sql(q_new)
+    assert r_new.records == [{"n": 0}]
+    for r in (r_all, r_new):
+        # answered from metadata alone: the defect's precondition
+        assert r.metadata["zonemap"]["rc14"]["agg_pushdown"]["files_scanned"] == 0
+        assert r.metadata["result_cache"] == {"hit": False, "stored": True}
+    assert eng.sql(q_all).metadata["result_cache"] == {"hit": True}
+    assert eng.sql(q_new).metadata["result_cache"] == {"hit": True}
+
+    delta = orders.limit(5).withColumn(
+        "o_orderkey", F.col("o_orderkey") + hi + 1
+    )
+    eng.write(delta, src, mode="append")
+    Z.append_zonemap(spark, src, ["o_orderkey"])
+    eng.register("rc14", src)
+
+    r_all = eng.sql(q_all)
+    r_new = eng.sql(q_new)
+    assert r_all.metadata["result_cache"]["hit"] is False
+    assert r_new.metadata["result_cache"]["hit"] is False
+    assert r_all.records == [{"n": n0 + 5}]
+    assert r_new.records == [{"n": 5}]
+    # no commit since: the new answers are cached and hit
+    hit_all, hit_new = eng.sql(q_all), eng.sql(q_new)
+    assert hit_all.metadata["result_cache"] == {"hit": True}
+    assert hit_new.metadata["result_cache"] == {"hit": True}
+    assert hit_all.records == [{"n": n0 + 5}]
+    assert hit_new.records == [{"n": 5}]
+    spark.catalog.dropTempView("rc14")
+
+
 def test_result_cache_array_exists_still_caches(spark, sf_dir, tmp_path):
     """r15 review: ArrayExists (the exists() higher-order function)
     must not be mistaken for a subquery plan-holder — the query is

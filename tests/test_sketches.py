@@ -534,3 +534,15 @@ def test_bloom_broadcast_transport_equals_literal_and_plan_stays_flat(spark):
         "bp", OP.bloom_pass_expr(big, F.col("k").cast("string"), k=OP.BLOOM_SIZED_K)
     )
     assert len(formatted_plan(lit_big)) > len(formatted_plan(lit)) + len(big)
+
+
+def test_key_count_sample_from_counts_matches_raw(spark, sf_dir):
+    """``key_count_sample_from_counts`` over a pre-aggregated (k, cnt)
+    frame equals ``key_count_sample`` over the raw rows."""
+    from quack_reduce_spark.inventory._util import load
+
+    li = load(spark, sf_dir, "lineitem").select(F.col("l_partkey").alias("k"))
+    counts = li.groupBy("k").agg(F.count(F.lit(1)).alias("cnt"))
+    a = OP.key_count_sample(li, "k", 64).collect()[0]["__smp"]
+    b = OP.key_count_sample_from_counts(counts, 64).collect()[0]["__smp"]
+    assert [tuple(s) for s in a] == [tuple(s) for s in b]

@@ -1,15 +1,25 @@
-"""Regenerate docs/PLANS.md — annotated physical plans of headline
-queries (SURVEY §4 plan-quality evidence).
+"""Dump formatted physical plans.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Two modes:
+
+- ``python tools/dump_plans.py [sf_dir]`` regenerates docs/PLANS.md,
+  the annotated plans of the headline queries (SURVEY §4 plan-quality
+  evidence; sf_dir defaults to the sf0.1 fixture).
+- ``python tools/dump_plans.py --set <name> <tag> [query ...]`` writes
+  ``plans/<name>/<query>_<tag>.txt`` for each query of the named set
+  in ``QUERY_SETS`` (or the listed queries), at bench.py's sf dir
+  ($SPARK_GRAFT_SF_DIR). ``tag`` is the file suffix, e.g. "before" /
+  "after" for an optimization round's plan evidence.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from quack_reduce_spark import plans  # noqa: E402
 from quack_reduce_spark.inventory import all_queries  # noqa: E402
@@ -73,7 +83,75 @@ NOTES = {
 }
 
 
+# Named query sets: the queries each optimization round examined or
+# touched; their before/after plans are committed under plans/<name>/.
+QUERY_SETS = {
+    "r16": [
+        "graph_pagerank",
+        "graph_triangles",
+        "sim_pca_topk",
+        "sim_cosine_topk",
+        "dedup_minhash_lsh",
+        "dedup_ngram_jaccard",
+        "dedup_prefix_filter",
+        "dedup_lsh_index_probe",
+        "tpch_q9_product_type_profit",
+        "tpch_q21_suppliers_who_kept_waiting",
+        "sketch_join_cardinality",
+        "sketch_cms_heavy_hitters",
+        "sketch_bloom_semijoin",
+        "sketch_theta_intersect",
+        "sketch_topn_sample_quantiles",
+        "dedup_ngram_capped",
+        "ml_weighted_sample",
+        "text_bm25_topk",
+        "graph_pagerank_top",
+        "sim_pca_variance",
+        "sim_filtered_topk",
+    ],
+    "r17": [
+        "dedup_minhash_lsh",
+        "dedup_ngram_jaccard",
+        "dedup_prefix_filter",
+        "dedup_lsh_index_probe",
+        "sim_pca_topk",
+        "dq_expectations",
+        "sketch_bloom_semijoin",
+        "graph_triangles",
+        "dedup_substring",
+    ],
+}
+
+
+def dump_set(name: str, tag: str, queries: list[str]) -> None:
+    """Write plans/<name>/<query>_<tag>.txt for each query, planned at
+    the sf dir the bench measures."""
+    from bench import SF_DIR as sf
+
+    spark = get_spark(app_name=f"{name}-plan-dump")
+    qs = all_queries()
+    out_dir = os.path.join(REPO, "plans", name)
+    os.makedirs(out_dir, exist_ok=True)
+    for q in queries or QUERY_SETS[name]:
+        spark.sparkContext.setJobDescription(f"{name} plan dump: {q}")
+        plan = plans.formatted_plan(qs[q](spark, sf))
+        path = os.path.join(out_dir, f"{q}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path} ({len(plan)} chars)")
+    spark.sparkContext.setJobDescription(None)
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--set"]:
+        args = sys.argv[2:]
+        if len(args) < 2 or args[0] not in QUERY_SETS:
+            raise SystemExit(
+                "usage: dump_plans.py --set {" + ",".join(QUERY_SETS)
+                + "} <tag> [query ...]"
+            )
+        dump_set(args[0], args[1], args[2:])
+        return
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("plan-audit")
     qs = all_queries()
@@ -87,7 +165,7 @@ def main() -> None:
             for m in re.finditer(r"\((\d+)\) Scan parquet ?\n((?:.+\n)+?)\n", p)
         ]
         out.append(f"## {name}\n\n{note}\n\n```\n{tree}\n\n" + "\n".join(details) + "```\n")
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote docs/PLANS.md")
 

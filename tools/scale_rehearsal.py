@@ -128,18 +128,6 @@ ALL_FAMILIES = [
     # is O(#files x groups) with a tiny constant, so probe time must
     # grow far slower than the table
     "lake_gstats_probe",
-    # round-15 addition: top-k file pushdown vs a growing table
-    # clustered on the sort column — ORDER BY key DESC LIMIT 20 must
-    # read O(k / rows-per-file) files at EVERY size (the static
-    # k-bound excludes everything below the k-th candidate), so
-    # files_read stays flat while files_total grows 10x
-    "lake_topk_probe",
-    # round-16 addition: star-join grouped pushdown vs a growing
-    # UNCLUSTERED fact with per-(file, join-key) slices and a FIXED
-    # 3-row dim — fact JOIN dim GROUP BY dim attr must answer with
-    # zero fact files scanned at every size (driver-side slice fold +
-    # one bounded dim evaluation)
-    "lake_star_probe",
 ]
 
 
@@ -696,113 +684,6 @@ def main() -> None:
                     )
                     gs_rows["files_total"].append(gplan.get("files_total"))
 
-                # r15: top-k file pushdown on a replica CLUSTERED by
-                # the sort column — the k-bound must keep files_read
-                # flat (O(k / rows-per-file)) while files_total grows
-                if "lake_topk_probe" in wanted:
-                    from quack_reduce_spark.engine import Engine as _Eng5
-                    from quack_reduce_spark.operators import zonemaps as _Z5
-
-                    kpath = f"{tmp}/tk_orders_x{m}"
-                    (
-                        rep_orders.repartitionByRange(12 * m, "o_orderkey")
-                        .sortWithinPartitions("o_orderkey")
-                        .write.mode("overwrite")
-                        .parquet(kpath)
-                    )
-                    _Z5.write_zonemap(spark, kpath, ["o_orderkey"])
-                    eng5 = _Eng5(spark=spark, result_cache=False)
-                    kview = f"zm_tk_x{m}"
-                    eng5.register(kview, kpath)
-                    qk = (
-                        f"SELECT o_orderkey, o_totalprice FROM {kview}"
-                        f" ORDER BY o_orderkey DESC LIMIT 20"
-                    )
-
-                    def tk_probe(eng5=eng5, qk=qk):
-                        def thunk():
-                            eng5.df(qk).collect()
-                        return thunk
-
-                    tk_probe()()  # warm (fills the manifest caches)
-                    tk = _timed(tk_probe())
-                    krep = (
-                        eng5.last_zonemap_report.get(kview) or {}
-                    ).get("topk") or {}
-                    tk_rows = results.setdefault(
-                        "lake_topk_probe",
-                        {"mults": [], "rows": [], "sec": [],
-                         "files_read": [], "files_total": []},
-                    )
-                    tk_rows["mults"].append(m)
-                    tk_rows["rows"].append(n_base * m)
-                    tk_rows["sec"].append(round(tk, 3))
-                    tk_rows["files_read"].append(krep.get("files_read"))
-                    tk_rows["files_total"].append(krep.get("files_total"))
-
-                # r16: star-join grouped pushdown on an UNCLUSTERED
-                # fact with slices on the join key + a FIXED tiny dim
-                # — zero fact files scanned at every size
-                if "lake_star_probe" in wanted:
-                    from quack_reduce_spark.engine import Engine as _Eng6
-                    from quack_reduce_spark.operators import zonemaps as _Z6
-
-                    if "lake_gstats_probe" in wanted:
-                        spath = gpath  # identical layout: reuse build
-                    else:
-                        spath = f"{tmp}/st_orders_x{m}"
-                        (
-                            rep_orders.repartition(12 * m)
-                            .write.mode("overwrite")
-                            .parquet(spath)
-                        )
-                        _Z6.write_zonemap(
-                            spark, spath, ["o_orderstatus", "o_orderkey"],
-                            group_stats_cols=["o_orderstatus"],
-                        )
-                    dpath = f"{tmp}/st_dim_x{m}"
-                    spark.createDataFrame(
-                        [("F", "fulfilled", 1), ("O", "open", 2),
-                         ("P", "pending", 3)],
-                        "d_status string, d_label string, d_prio int",
-                    ).coalesce(1).write.mode("overwrite").parquet(dpath)
-                    eng6 = _Eng6(spark=spark, result_cache=False)
-                    sview, dview = f"zm_st_x{m}", f"zm_std_x{m}"
-                    eng6.register(sview, spath)
-                    eng6.register(dview, dpath)
-                    qs = (
-                        f"SELECT d_label, COUNT(*) AS n,"
-                        f" SUM(o_orderkey) AS s FROM {sview} JOIN {dview}"
-                        f" ON o_orderstatus = d_status WHERE d_prio <= 2"
-                        f" GROUP BY d_label"
-                    )
-
-                    def st_probe(eng6=eng6, qs=qs):
-                        def thunk():
-                            eng6.df(qs).collect()
-                        return thunk
-
-                    st_probe()()  # warm (manifest + slice caches)
-                    t_star = _timed(st_probe())
-                    splan = eng6.last_star_plan or {}
-                    st_rows = results.setdefault(
-                        "lake_star_probe",
-                        {"mults": [], "rows": [], "sec": [],
-                         "files_scanned": [], "files_group_stats": [],
-                         "files_total": [], "fact_keys": []},
-                    )
-                    st_rows["mults"].append(m)
-                    st_rows["rows"].append(n_base * m)
-                    st_rows["sec"].append(round(t_star, 3))
-                    st_rows["files_scanned"].append(
-                        splan.get("files_scanned")
-                    )
-                    st_rows["files_group_stats"].append(
-                        splan.get("files_group_stats")
-                    )
-                    st_rows["files_total"].append(splan.get("files_total"))
-                    st_rows["fact_keys"].append(splan.get("fact_keys"))
-
                 # r13: MV rewrite + incremental maintenance over the
                 # same table. LAST in the loop body: the fixed-size
                 # delta append below mutates zpath
@@ -920,32 +801,6 @@ def main() -> None:
                 print(
                     f"  lake_gstats_probe: {gr['sec']} scanned/gs/total "
                     f"{list(zip(gr['files_scanned'], gr['files_group_stats'], gr['files_total']))}",
-                    file=sys.stderr,
-                )
-            if "lake_topk_probe" in results:
-                kr = results["lake_topk_probe"]
-                kr["fit_exp"] = round(_fit_exponent(kr["rows"], kr["sec"]), 3)
-                kr["tail_exp"] = round(
-                    math.log(kr["sec"][-1] / kr["sec"][-2])
-                    / math.log(MULTS[-1] / MULTS[-2]),
-                    3,
-                )
-                print(
-                    f"  lake_topk_probe: {kr['sec']} read/total "
-                    f"{list(zip(kr['files_read'], kr['files_total']))}",
-                    file=sys.stderr,
-                )
-            if "lake_star_probe" in results:
-                sr = results["lake_star_probe"]
-                sr["fit_exp"] = round(_fit_exponent(sr["rows"], sr["sec"]), 3)
-                sr["tail_exp"] = round(
-                    math.log(sr["sec"][-1] / sr["sec"][-2])
-                    / math.log(MULTS[-1] / MULTS[-2]),
-                    3,
-                )
-                print(
-                    f"  lake_star_probe: {sr['sec']} scanned/gs/total "
-                    f"{list(zip(sr['files_scanned'], sr['files_group_stats'], sr['files_total']))}",
                     file=sys.stderr,
                 )
             if "lake_mv_probe" in results:
@@ -1351,36 +1206,6 @@ def main() -> None:
                 "size is the unclustered-grouped-pushdown claim under "
                 "test; probe time is driver-side slice folding, "
                 "O(#files x groups) with a tiny constant."
-            )
-        if "lake_topk_probe" in results:
-            r = results["lake_topk_probe"]
-            lines.append("")
-            lines.append(
-                "The `lake_topk_probe` row times `ORDER BY o_orderkey "
-                "DESC LIMIT 20` over a table clustered on the sort "
-                "column growing 1→10x: the static k-bound read "
-                f"{r['files_read']} of {r['files_total']} files at mult "
-                f"{MULTS}. Flat files_read at O(k / rows-per-file) while "
-                "the table grows is the top-k-pushdown claim under test "
-                "— the raw-column sibling of the reference's flagship "
-                "ORDER BY 2 DESC LIMIT 200 stays metadata-bounded at "
-                "any table size."
-            )
-        if "lake_star_probe" in results:
-            r = results["lake_star_probe"]
-            lines.append("")
-            lines.append(
-                "The `lake_star_probe` row times a STAR query (fact "
-                "JOIN a fixed 3-row dim on status, dim-side predicate, "
-                "GROUP BY dim label) over an UNCLUSTERED fact growing "
-                "1→10x with per-(file, join-key) slices: it scanned "
-                f"{r['files_scanned']} of {r['files_total']} fact files "
-                f"(slice-answered files {r['files_group_stats']}, fact "
-                f"keys {r['fact_keys']}) at mult {MULTS}. Zero fact "
-                "files scanned at every size is the star-join-pushdown "
-                "claim under test — the TPC-H q3/q5 dashboard shape "
-                "answered at metadata cost plus one bounded dim "
-                "evaluation."
             )
         if "candidates" in results.get("dedup_prefix_filter", {}):
             r = results["dedup_prefix_filter"]
