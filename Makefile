@@ -16,9 +16,10 @@ test-distinct:
 	   WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01' \
 	   GROUP BY 1 ORDER BY 2 DESC" -limit 10
 
-# full pytest suite
+# full pytest suite: the tier-1 gate (ROADMAP.md), same env and timeout
 unit:
-	python -m pytest tests/ -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # DuckDB differential harness over the whole inventory
 oracle:

@@ -3,8 +3,8 @@ script: clustered write -> automatic SQL file skipping (range / IN /
 OR / LIKE / IS NULL) -> ANALYZE from metadata -> estimate-driven join
 planning -> layout degradation by random appends -> OPTIMIZE restoring
 pruning -> the round-12 metadata layers (per-file Bloom fingerprints,
-equi-depth histograms, per-file HLL NDV sketches, and dynamic file
-pruning from join dimensions) -> the round-13/14 acceleration
+equi-depth histograms and per-file HLL NDV sketches) -> the
+round-13/14 acceleration
 stack (SQL aggregate pushdown, unclustered per-group slice partials,
 MV rewrite with stale compensation and predicate containment, the
 result cache). Every step prints the engine's own telemetry, so the
@@ -157,37 +157,7 @@ def main() -> None:
             f"{rep['join_est_source']} est_rows~{int(rep['est_join_rows'])}"
         )
 
-        # 12. dynamic file pruning from a join dimension: the star
-        # query's ONLY predicate is on the dim side, yet the custkey-
-        # clustered fact skips files — the engine derives the
-        # surviving join keys from the dim subplan at plan time
-        fact = f"{tmp}/orders_ck"
-        eng.write_clustered(orders, fact, ["o_custkey"], n_files=12)
-        eng.register("fact_ck", fact)
-        eng.register("dim_cust", f"{sf_dir.rstrip('/')}/customer.parquet")
-        eng.df(
-            "SELECT COUNT(*) AS n FROM fact_ck "
-            "JOIN dim_cust ON o_custkey = c_custkey "
-            "WHERE c_name LIKE 'Customer#00000000%'"
-        ).collect()
-        print(f"[12] DPP from dim filter: {eng.last_zonemap_report.get('fact_ck')}")
-
-        # 13. the SAME star re-planned: the plan-time key set is served
-        # from the canonicalized-subplan cache — zero Spark jobs
-        from quack_reduce_spark.plans import zonemap_pushdown as _zp
-
-        before = dict(_zp.DPP_COUNTS)
-        eng.df(
-            "SELECT COUNT(*) AS n FROM fact_ck "
-            "JOIN dim_cust ON o_custkey = c_custkey "
-            "WHERE c_name LIKE 'Customer#00000000%'"
-        ).collect()
-        print(
-            f"[13] repeat planning: evals +{_zp.DPP_COUNTS['evals'] - before['evals']}, "
-            f"cache hits +{_zp.DPP_COUNTS['cache_hits'] - before['cache_hits']}"
-        )
-
-        # 14. the dashboard count itself (round 13): a scalar aggregate
+        # 12. the dashboard count itself (round 13): a scalar aggregate
         # through plain SQL answers from metadata — contained files
         # contribute exact partials unread, only boundary files scan,
         # and the whole-table count compiles to a plan with NO file
@@ -196,9 +166,9 @@ def main() -> None:
             "SELECT COUNT(*) AS n, MIN(o_orderdate) AS mn "
             "FROM orders_c WHERE o_orderdate >= TIMESTAMP '1996-01-01'"
         )
-        print(f"[14] SQL agg pushdown: {res.metadata['zonemap']}")
+        print(f"[12] SQL agg pushdown: {res.metadata['zonemap']}")
 
-        # 15. decimal stats in unscaled-int space: a price-clustered
+        # 13. decimal stats in unscaled-int space: a price-clustered
         # decimal table prunes on plain SQL decimal ranges
         decp = f"{tmp}/orders_dec"
         dec = orders.withColumn(
@@ -210,9 +180,9 @@ def main() -> None:
             "SELECT price FROM orders_dec "
             "WHERE price BETWEEN 1000.00 AND 20000.00"
         ).collect()
-        print(f"[15] decimal range pruning: {eng.last_zonemap_report.get('orders_dec')}")
+        print(f"[13] decimal range pruning: {eng.last_zonemap_report.get('orders_dec')}")
 
-        # 16. the time-series dashboard (late round 13): GROUP BY
+        # 14. the time-series dashboard (late round 13): GROUP BY
         # year(d) pins date-clustered files to their bucket from
         # metadata; unique-per-bucket (the DAU shape) composes when
         # the distinct column is statted too
@@ -227,9 +197,9 @@ def main() -> None:
             "COUNT(DISTINCT o_custkey) AS u FROM orders_dau "
             "GROUP BY 1 ORDER BY y"
         ).collect()
-        print(f"[16] time-bucket + unique-per-bucket: {eng.last_agg_plan}")
+        print(f"[14] time-bucket + unique-per-bucket: {eng.last_agg_plan}")
 
-        # 17. a monthly summary MV with transparent rewrite: the
+        # 15. a monthly summary MV with transparent rewrite: the
         # yearly query rebuckets the monthly partials (rollup across
         # granularities), and incremental refresh reads only appends.
         # A PLAIN (manifest-less) table shows the MV path — on a
@@ -248,16 +218,16 @@ def main() -> None:
             "SELECT year(o_orderdate) AS y, AVG(o_orderkey) AS a "
             "FROM orders_plain GROUP BY 1"
         ).collect()
-        print(f"[17] yearly-over-monthly MV rewrite: {eng.last_mv_rewrite}")
+        print(f"[15] yearly-over-monthly MV rewrite: {eng.last_mv_rewrite}")
 
-        # 18. the result cache: the second identical envelope query
+        # 16. the result cache: the second identical envelope query
         # returns with ZERO Spark jobs; any commit invalidates
         q = "SELECT COUNT(*) AS n FROM orders_plain"
         eng.sql(q)
         res = eng.sql(q)
-        print(f"[18] result cache: {res.metadata['result_cache']}")
+        print(f"[16] result cache: {res.metadata['result_cache']}")
 
-        # 19. UNCLUSTERED group pushdown (round 14): the table is
+        # 17. UNCLUSTERED group pushdown (round 14): the table is
         # round-robin laid out — every file mixes every status, so
         # file-level pinning can never answer a GROUP BY — but
         # per-(file, value) slice partials in the manifest do, at
@@ -276,13 +246,13 @@ def main() -> None:
             "SELECT o_orderstatus, COUNT(*) AS n, SUM(o_orderkey) AS s "
             "FROM orders_gs GROUP BY 1"
         ).collect()
-        print(f"[19] unclustered group pushdown: {eng.last_agg_plan}")
+        print(f"[17] unclustered group pushdown: {eng.last_agg_plan}")
         eng.df(
             "SELECT COUNT(*) AS n FROM orders_gs WHERE o_orderstatus = 'F'"
         ).collect()
-        print(f"[19]   scalar widget over slices: {eng.last_agg_plan}")
+        print(f"[17]   scalar widget over slices: {eng.last_agg_plan}")
 
-        # 20. stale-MV compensation (round 14): the source APPENDS and
+        # 18. stale-MV compensation (round 14): the source APPENDS and
         # the MV still rewrites — its partials union an aggregate over
         # ONLY the verified delta files; after a refresh the plain
         # rewrite resumes
@@ -291,15 +261,15 @@ def main() -> None:
             "SELECT trunc(o_orderdate,'month') AS m, COUNT(*) AS n "
             "FROM orders_plain GROUP BY 1"
         ).collect()
-        print(f"[20] stale-MV compensation: {eng.last_mv_rewrite}")
+        print(f"[18] stale-MV compensation: {eng.last_mv_rewrite}")
         eng.refresh_materialized_view("orders_monthly", incremental=True)
         eng.df(
             "SELECT trunc(o_orderdate,'month') AS m, COUNT(*) AS n "
             "FROM orders_plain GROUP BY 1"
         ).collect()
-        print(f"[20]   after incremental refresh: {eng.last_mv_rewrite}")
+        print(f"[18]   after incremental refresh: {eng.last_mv_rewrite}")
 
-        # 21. a PREDICATE-bearing MV (the reference's own dbt model is
+        # 19. a PREDICATE-bearing MV (the reference's own dbt model is
         # a filtered aggregate view): rewrites require the query
         # predicate to CONTAIN the MV's; wider queries run plain
         eng.create_materialized_view(
@@ -312,9 +282,9 @@ def main() -> None:
             "SELECT COUNT(*) AS n FROM orders_plain "
             "WHERE o_orderkey > 1000 AND o_orderstatus = 'F'"
         ).collect()
-        print(f"[21] filtered-MV containment rewrite: {eng.last_mv_rewrite}")
+        print(f"[19] filtered-MV containment rewrite: {eng.last_mv_rewrite}")
 
-        # 22. COMPOSITE slice keys (round 15): GROUP BY over TWO
+        # 20. COMPOSITE slice keys (round 15): GROUP BY over TWO
         # columns where neither clusters — per-(file, a, b) slice rows
         # answer at zero files scanned
         gsp2 = f"{tmp}/orders_gs2"
@@ -328,9 +298,9 @@ def main() -> None:
             "SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n "
             "FROM orders_gs2 GROUP BY 1, 2"
         ).collect()
-        print(f"[22] composite-key slice pushdown: {eng.last_agg_plan}")
+        print(f"[20] composite-key slice pushdown: {eng.last_agg_plan}")
 
-        # 23. MV lifecycle across maintenance (round 15): optimize the
+        # 21. MV lifecycle across maintenance (round 15): optimize the
         # MV's source — the hook marks the MV and the next query
         # self-refreshes it, so the rewrite stays alive with no manual
         # refresh call
@@ -340,7 +310,7 @@ def main() -> None:
             "SELECT trunc(o_orderdate,'month') AS m, COUNT(*) AS n "
             "FROM orders_plain GROUP BY 1"
         ).collect()
-        print(f"[23] MV alive after optimize (self-refreshed): {eng.last_mv_rewrite}")
+        print(f"[21] MV alive after optimize (self-refreshed): {eng.last_mv_rewrite}")
 
 
 if __name__ == "__main__":

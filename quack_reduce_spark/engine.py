@@ -250,9 +250,9 @@ class Engine:
         Predicates on zone-mapped tables' stats columns — ranges,
         IN-lists, ORs of ranges, LIKE-prefixes, IS [NOT] NULL (see
         plans/zonemap_pushdown.py for the full coverage) — plan from
-        the manifest (file skipping) automatically, and a shuffle join
-        whose file-pruned side is estimated small gets a broadcast
-        hint."""
+        the manifest (file skipping) automatically; aggregates may answer
+        from the manifest or a fresh materialized view (see
+        ``_sql_planned_report``)."""
         self._refresh_versioned_views()
         return self._sql_planned(query)
 
@@ -276,9 +276,8 @@ class Engine:
            answers from the manifest plus its boundary files;
         2. materialized-view rewrite (plans/mv_rewrite.py): an
            aggregate re-plans over a fresh MV's partials;
-        3. zone-map file skipping (plans/zonemap_pushdown.py), with
-           dynamic file pruning and a semijoin row filter derived from
-           join dimensions, and estimate-driven broadcast hints.
+        3. zone-map file skipping (plans/zonemap_pushdown.py) per
+           table scan.
 
         Every other shape runs on Spark's native plan. Returns ``(df,
         telemetry)`` — callers needing the report read the RETURN
@@ -301,16 +300,9 @@ class Engine:
         crash mid-rebind can never leave a session view bound to a
         pruned subset. The query's own WHERE still executes, so
         pruning is sound by construction: any extraction miss only
-        means fewer files skipped.
-
-        Broadcast hints (the CBO loop closed on the SQL surface): a
-        zone-mapped table scanned under a SortMergeJoin whose
-        SURVIVING file bytes — the same units Spark's static size
-        stats compare against the broadcast threshold — fit under
-        ``BROADCAST_THRESHOLD`` gets rebound with ``.hint("broadcast")``,
-        fixing the filtered-dim case where static stats see the FULL
-        file size (Filter passes size stats through) and pick a
-        shuffle join for a few surviving rows.
+        means fewer files skipped. Joins get no dim-driven file
+        skipping; join-strategy choice is left to Spark's planner and
+        AQE.
 
         Locking: temp views are session-global, so the two windows
         that TOUCH views (the initial plan, and the rebind + re-plan)
@@ -383,103 +375,31 @@ class Engine:
                 )
             except Exception:
                 return df, {}  # plan-shape drift: pushdown is best-effort
-        rebinds: dict[str, tuple[list[str], int, dict]] = {}
-        dpp_applied: dict[str, dict] = {}
+        rebinds: dict[str, tuple[list[str], int]] = {}
         try:
-            # dynamic file pruning from join dimensions: a star query
-            # filtering only the dim side derives the surviving join-
-            # key set (bounded values or envelope) from the dim
-            # subplan and intersects it into the fact scan's manifest
-            # constraints — fact files whose key range cannot meet any
-            # surviving dim key are skipped even though the query has
-            # no fact predicate at all (see zonemap_pushdown's DPP
-            # section for the soundness gates)
-            dpp = _zp.join_dim_constraints(
-                df,
-                {n: p for n, (p, _) in zm_tables.items()},
-                {n: c for n, (_, c) in zm_tables.items()},
-            )
-            for name, entry in dpp.items():
-                scans = cons.get(name)
-                if not scans or len(scans) != 1:
-                    continue  # one logical relation must be one scan
-                for col, (constraint, n_keys) in entry["cols"].items():
-                    _zp.merge_dim_constraint(scans, col, constraint)
-                    dpp_applied.setdefault(name, {})[col] = n_keys
             for name, scans in cons.items():
                 path, cols = zm_tables[name]
                 got = _zp.plan_pruned_files(self.spark, path, cols, scans)
                 if got is not None:
                     rebinds[name] = got
-            smj_tables = _zp.join_scan_tables(
-                df, {n: p for n, (p, _) in zm_tables.items()}
-            )
         except Exception:
-            return df, {}  # manifest/bridge failure: run unpruned
-        hints = {
-            name
-            for name in rebinds
-            if name in smj_tables
-            and rebinds[name][2].get("est_bytes") is not None
-            and rebinds[name][2]["est_bytes"] <= self.BROADCAST_THRESHOLD
-        }
-        # Pre-shuffle SEMIJOIN row filter (the runtime-filter idea,
-        # exact instead of Bloom): when DPP derived a bounded VALUE SET
-        # of surviving join keys and the fact scan feeds a SHUFFLED
-        # join, the rebound view additionally filters ROWS by that key
-        # set — rows that provably cannot join never enter the
-        # exchange, which is most of the shuffle on a selective star.
-        # This fires even when no FILE can be skipped (keys spread
-        # across every file — the case pruning can't help); it is
-        # exact (keys are the dim side's full evaluation, the join
-        # re-checks equality), so results are row-identical. Value
-        # sets are <= DPP_MAX_KEYS, so the predicate compiles to an
-        # InSet (binary search per row, JVM-side).
-        row_filters: dict[str, dict] = {}
-        for name in dpp_applied:
-            if name not in smj_tables:
-                continue  # broadcast join: the fact never shuffles
-            colmap = {
-                col: constraint[2]
-                for col, (constraint, n_keys) in dpp[name]["cols"].items()
-                if constraint[2] is not None and n_keys is not None
-            }
-            if colmap:
-                row_filters[name] = colmap
-        targets: dict[str, tuple] = dict(rebinds)
-        for name in row_filters:
-            # no file was skippable, but the row filter still pays:
-            # rebind the FULL file set with the filter on top
-            targets.setdefault(name, (None, None, None))
-        if not targets:
+            return df, {}  # manifest failure: run unpruned
+        if not rebinds:
             return df, {}
-        row_applied: dict[str, dict] = {}
         with self._plan_lock:
             # capture the CURRENT (original) view frames — restoring
             # them is a pure re-registration, no file I/O to fail
-            originals = {n: self.spark.table(n) for n in targets}
+            originals = {n: self.spark.table(n) for n in rebinds}
             planned = None
             try:
-                for name, (files, _total, _stats) in targets.items():
+                for name, (files, _total) in rebinds.items():
                     path, _ = zm_tables[name]
-                    if files is None:
-                        pruned = self.spark.read.parquet(path)
-                    elif files:
+                    if files:
                         pruned = self.spark.read.option("basePath", path).parquet(
                             *files
                         )
                     else:
                         pruned = self.spark.read.parquet(path).where(F.lit(False))
-                    if name in row_filters:
-                        got = self._dpp_row_predicate(
-                            pruned, row_filters[name]
-                        )
-                        if got is not None:
-                            pred, applied = got
-                            pruned = pruned.where(pred)
-                            row_applied[name] = applied
-                    if name in hints:
-                        pruned = pruned.hint("broadcast")
                     pruned.createOrReplaceTempView(name)
                 planned = self.spark.sql(query)  # analyzed now: binds pruned
             except Exception:
@@ -489,60 +409,15 @@ class Engine:
                     odf.createOrReplaceTempView(name)
         if planned is None:
             return df, {}
-        report = {}
-        for name, entry in targets.items():
-            if name in rebinds:
-                files, total, stats = rebinds[name]
-                report[name] = {
-                    "files_read": len(files),
-                    "files_total": total,
-                    "columns": zm_tables[name][1],
-                    "est_rows": stats["est_rows"],
-                    "est_bytes": stats["est_bytes"],
-                    "broadcast_hint": name in hints,
-                }
-            else:
-                report[name] = {"columns": zm_tables[name][1]}
-            if name in dpp_applied:
-                report[name]["dpp"] = dpp_applied[name]
-            if name in row_applied:
-                report[name]["dpp_row_filter"] = row_applied[name]
+        report = {
+            name: {
+                "files_read": len(files),
+                "files_total": total,
+                "columns": zm_tables[name][1],
+            }
+            for name, (files, total) in rebinds.items()
+        }
         return planned, report
-
-    @staticmethod
-    def _dpp_row_predicate(pruned: DataFrame, colmap: dict) -> tuple | None:
-        """(predicate Column, {col: n_keys}) filtering rows to the DPP
-        key sets, or None when no column's type filters soundly.
-        Session-zoned timestamp keys are epoch micros (the collection
-        domain) and compare via unix_micros — zone-free; NTZ columns
-        are SKIPPED (a naive-datetime literal renders through the
-        driver-OS zone, which off-UTC could drop matching rows — file
-        pruning still applies to them, driver-side comparisons are
-        exact there)."""
-        from quack_reduce_spark.operators import zonemaps as _zm
-
-        by_type = _zm._py_field_types(pruned)
-        pred = None
-        applied: dict[str, int] = {}
-        for col, vals in colmap.items():
-            t = by_type.get(col)
-            dec_s = _zm._unscaled_decimal(t)
-            if t == "timestamp":
-                cond = F.unix_micros(F.col(col)).isin([int(v) for v in vals])
-            elif dec_s is not None:
-                # DPP decimal keys arrive in unscaled-int space
-                cond = _zm._unscaled_col(col, dec_s).isin(
-                    [int(v) for v in vals]
-                )
-            elif t in (None, "timestamp_ntz") or t.startswith("decimal"):
-                continue
-            else:
-                cond = F.col(col).isin(list(vals))
-            pred = cond if pred is None else (pred & cond)
-            applied[col] = len(vals)
-        if pred is None:
-            return None
-        return pred, applied
 
     def _try_agg_pushdown(
         self, df: DataFrame, zm_tables: dict[str, tuple[str, list[str]]]
@@ -1110,14 +985,6 @@ class Engine:
         self.last_join_plan = report
         return report
 
-    # Runtime-filter gates: inject a Bloom pre-filter only when the
-    # estimate says the join keeps under this fraction of the probe
-    # side (otherwise the filter mostly passes rows and just costs a
-    # digest per row), and only when the build side is small enough
-    # that its sized bitset (~n/6 longs) is a driver-bounded artifact.
-    RUNTIME_FILTER_SELECTIVITY = 0.5
-    RUNTIME_FILTER_MAX_BUILD_ROWS = 2_000_000
-
     def plan_join(
         self,
         left: DataFrame | str,
@@ -1126,26 +993,14 @@ class Engine:
         how: str = "inner",
         n: int = 128,
         broadcast_threshold_bytes: int = BROADCAST_THRESHOLD,
-        runtime_filter: bool = True,
     ) -> DataFrame:
         """``left.join(right, on)`` with the join strategy chosen by
         :meth:`explain_join`'s estimate instead of static file-size
         stats: the side whose ESTIMATED bytes fit under the threshold
         gets an explicit broadcast hint (exactly what a CBO does with
         ANALYZE stats); otherwise the join is left to the default
-        planner — but first, when the estimate says the shuffle join
-        is SELECTIVE (est_join_rows well under the probe side's rows),
-        the smaller side's keys fold into a sized Bloom bitset and
-        pre-filter the bigger side BEFORE its shuffle (Spark's AQE
-        runtime bloom join, engine-portable): rows whose keys cannot
-        match never enter the exchange, which at 100 TB is most of the
-        shuffle. Inner joins only — filtering the preserved side of an
-        outer join would invent NULL rows; false positives are
-        harmless because the join re-checks equality, and no true
-        match is ever dropped (no false negatives by construction).
-        The report lands in ``self.last_join_plan``; when the filter
-        fired it carries ``runtime_filter: {side, m_bits,
-        n_build_rows}``."""
+        planner and AQE, with no runtime pre-filter. The report lands
+        in ``self.last_join_plan``."""
         report = self.explain_join(
             left, right, on, n=n,
             broadcast_threshold_bytes=broadcast_threshold_bytes,
@@ -1156,51 +1011,6 @@ class Engine:
             return F.broadcast(lf).join(rf, on, how)
         if report["strategy"] == "broadcast_right":
             return lf.join(F.broadcast(rf), on, how)
-        if runtime_filter and how == "inner":
-            big_is_left = report["left"]["est_bytes"] >= report["right"]["est_bytes"]
-            probe_rows = report["left" if big_is_left else "right"]["rows"]
-            build_rows = report["right" if big_is_left else "left"]["rows"]
-            if (
-                probe_rows > 0
-                and build_rows <= self.RUNTIME_FILTER_MAX_BUILD_ROWS
-                and report["est_join_rows"]
-                <= self.RUNTIME_FILTER_SELECTIVITY * probe_rows
-            ):
-                from quack_reduce_spark.operators.sketches import (
-                    BLOOM_SIZED_K,
-                    bloom_filter_frame,
-                    bloom_size,
-                    bloom_words,
-                )
-
-                build = rf if big_is_left else lf
-                probe = lf if big_is_left else rf
-                words_n, m = bloom_size(build_rows)  # rows >= distinct
-                # NULL build keys never match an inner join, and
-                # md5(NULL) would poison the word aggregation with a
-                # (NULL, NULL) group row — drop them before folding
-                by_idx = {
-                    int(r["word_idx"]): int(r["word"])
-                    for r in bloom_words(
-                        build.select(on).where(F.col(on).isNotNull()),
-                        on, m=m, k=BLOOM_SIZED_K,
-                    ).collect()
-                    if r["word_idx"] is not None
-                }
-                words = [by_idx.get(i, 0) for i in range(words_n)]
-                probe = (
-                    bloom_filter_frame(
-                        probe, words, F.col(on).cast("string"), k=BLOOM_SIZED_K
-                    )
-                    .filter(F.col("bp"))
-                    .drop("bp")
-                )
-                report["runtime_filter"] = {
-                    "side": "left" if big_is_left else "right",
-                    "m_bits": m,
-                    "n_build_rows": build_rows,
-                }
-                lf, rf = (probe, rf) if big_is_left else (lf, probe)
         return lf.join(rf, on, how)
 
     def sql(self, query: str, limit: int | None = DEFAULT_LIMIT) -> QueryResult:

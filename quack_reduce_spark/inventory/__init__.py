@@ -109,9 +109,8 @@ _HEAD = [
     "lake_group_agg_pushdown",
     "lake_group_agg_unclustered",
     "lake_group_agg_multikey_unclustered",
-    # Adjacent machinery the r16 star path composes over (DPP dim
-    # evaluation, slice configs, MV lifecycle) + the two TPC-H star
-    # shapes the new pushdown targets at lake scale
+    # Adjacent lake shapes (a dim-filtered star, slice configs, MV
+    # lifecycle) + the two TPC-H star shapes at lake scale
     "lake_dpp_star",
     "lake_timebucket_agg",
     "lake_decimal_wide_stats",

@@ -571,19 +571,14 @@ def lake_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lake_dpp_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic file pruning from a join dimension (round 12): a star
-    query whose ONLY predicate sits on the dim side — a NON-key column
-    (``c_name LIKE ...``), so Catalyst cannot infer any fact-side
-    constraint — still skips fact files: the engine derives the
-    surviving join-key set from the dim subplan at plan time
-    (plans/zonemap_pushdown.py::join_dim_constraints, the manifest
-    analogue of Spark's Dynamic Partition Pruning and of the
-    reference's hand-issued per-partition map queries,
-    ``benchmark.py:237``) and intersects it into the custkey-clustered
-    fact's manifest planning. Gates: the in-query ``_require`` proves
-    DPP fired AND read at most a third of the files; the DuckDB oracle
-    recomputes the join from the raw fixtures with a plain WHERE, so
-    the hash match proves key-set pruning lost and invented nothing."""
+    """A star query whose ONLY predicate sits on the dim side — a
+    NON-key column (``c_name LIKE ...``), so Catalyst infers no
+    fact-side constraint — over a custkey-clustered, zone-mapped fact,
+    through ``Engine.df``. It runs on Spark's native plan (every fact
+    file is read; AQE picks the join strategy); the key is
+    kept as differential coverage of that engine path. The DuckDB
+    oracle recomputes the join from the raw fixtures with a plain
+    WHERE."""
     import uuid as _uuid
 
     from quack_reduce_spark.engine import Engine
@@ -615,16 +610,6 @@ def lake_dpp_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["o_orderstatus"], int(r["n_orders"]), float(r["sum_price"]))
         for r in planned.collect()
     ]
-    report = eng.last_zonemap_report.get(fact)
-    _require(report is not None, "engine did not plan from the zone map")
-    _require(
-        "dpp" in report and report["dpp"].get("o_custkey") is not None,
-        "no join-derived key set reached the fact scan", report,
-    )
-    _require(
-        report["files_read"] * 3 <= report["files_total"],
-        "dim-driven pruning failed to skip fact files", report,
-    )
     for v in (fact, dim):
         spark.catalog.dropTempView(v)
     shutil.rmtree(path, ignore_errors=True)
@@ -2404,7 +2389,6 @@ ORACLES = {
         )
         GROUP BY o_orderstatus
     """,
-    # join-dim-driven file pruning must be invisible in the answer:
     # the oracle recomputes the star join over the raw fixtures
     "lake_dpp_star": """
         SELECT o_orderstatus,

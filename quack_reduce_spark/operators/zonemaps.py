@@ -478,9 +478,7 @@ def _group_summaries(stats_g: DataFrame, cols: list[str]) -> dict[str, dict]:
 # md5 per value), probed DRIVER-SIDE at plan time — hashlib.md5 of the
 # value's string rendering reproduces Spark's ``md5(cast(c as
 # string))`` exactly, so no Spark job runs to plan. Equality and
-# IN-list constraints then prune files on ANY layout; join-derived DPP
-# key sets get the same treatment for free, which is what makes a
-# star lookup on an unclustered fact skip files.
+# IN-list constraints then prune files on ANY layout.
 
 # column types whose Spark cast-to-string rendering is reproduced
 # bit-exactly by Python str(): integer-family digits and raw strings.
@@ -910,10 +908,11 @@ def _sum_wide_dec(tname: Any) -> int | None:
 
 
 def _stat_aggs(cols: list[str], types: dict[str, str] | None = None) -> list[Column]:
-    # file_bytes (from the hidden _metadata column) feeds the engine's
-    # broadcast-hint estimate: surviving-file bytes are the same units
-    # Spark's own static size stats compare against the broadcast
-    # threshold, so no row-width guessing is involved
+    # file_bytes (from the hidden _metadata column) feeds
+    # manifest_stats' total_bytes, explain_join's exact side size:
+    # file bytes are the same units Spark's own static size stats
+    # compare against the broadcast threshold, so no row-width
+    # guessing is involved
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
         F.min("__fsize").alias("file_bytes"),

@@ -638,54 +638,6 @@ def scan_constraints(
     return out
 
 
-# -- dynamic file pruning from join dimensions (DPP on manifests) -----------
-#
-# The star-query gap: ``SELECT ... FROM fact JOIN dim ON fact.k = dim.k
-# WHERE dim.label = ...`` carries NO predicate on the fact side, so
-# per-scan constraint extraction finds nothing and every fact file is
-# read — the exact pattern Spark's own Dynamic Partition Pruning exists
-# for (and the one the reference hand-optimizes by issuing one query
-# per partition, benchmark.py:237). These helpers derive the surviving
-# JOIN-KEY set from the DIM side at plan time — the dim subplan is
-# wrapped back into a DataFrame and reduced to its distinct keys
-# (bounded) or its [min, max] envelope — and the engine intersects that
-# constraint into the fact scan's manifest planning, skipping fact
-# FILES whose key range cannot meet any surviving dim key.
-
-# A dim side bigger than this (static size estimate) is not worth a
-# plan-time subquery; real dims after a selective filter are far under.
-DPP_DIM_MAX_BYTES = 512 * 1024 * 1024
-# Distinct-key cap: at or below, the constraint is the exact VALUE SET
-# (binary-searched per file); above, the [min, max] envelope.
-DPP_MAX_KEYS = 4096
-# join type -> which orientations are sound for key-based file
-# skipping, as (prunable side, key-supplying side) selectors. Inner /
-# Cross prune either side; LeftSemi outputs only left rows; LeftOuter
-# preserves every LEFT row so only the RIGHT side is prunable
-# (unmatched right rows never surface) — and symmetrically for
-# RightOuter. FullOuter preserves both sides: nothing is prunable.
-_DPP_ORIENTATIONS = {
-    "Inner": (("l", "r"), ("r", "l")),
-    "Cross": (("l", "r"), ("r", "l")),
-    "LeftSemi": (("l", "r"),),
-    "LeftOuter": (("r", "l"),),
-    "RightOuter": (("l", "r"),),
-}
-# kept for test/back-compat introspection of which joins can fire DPP
-_DPP_JOIN_TYPES = frozenset(_DPP_ORIENTATIONS)
-_DPP_KEY_TYPES = {
-    "integer", "long", "short", "byte", "double", "float",
-    "string", "date", "timestamp", "timestamp_ntz",
-}
-
-
-def _dpp_key_type_ok(tname: str) -> bool:
-    from quack_reduce_spark.operators.zonemaps import _unscaled_decimal
-
-    # decimal(p<=18) joins prune through the unscaled-int stats space
-    return tname in _DPP_KEY_TYPES or _unscaled_decimal(tname) is not None
-
-
 def _iter_nodes(root: Any):
     stack = [root]
     while stack:
@@ -694,283 +646,6 @@ def _iter_nodes(root: Any):
         children = node.children()
         for i in range(children.size()):
             stack.append(children.apply(i))
-
-
-def _equi_pairs(cond: Any) -> list[tuple[Any, Any]]:
-    """(left_attr, right_attr) pairs from the EqualTo conjuncts of a
-    join condition whose both sides are bare AttributeReferences."""
-    out: list[tuple[Any, Any]] = []
-    stack = [cond]
-    while stack:
-        e = stack.pop()
-        name = e.getClass().getSimpleName()
-        if name == "And":
-            stack.extend((e.left(), e.right()))
-        elif name == "EqualTo":
-            l, r = e.left(), e.right()
-            if (
-                l.getClass().getSimpleName() == "AttributeReference"
-                and r.getClass().getSimpleName() == "AttributeReference"
-            ):
-                out.append((l, r))
-    return out
-
-
-def _table_relations(root: Any, name_by_root: dict[str, str]) -> list[tuple[str, Any]]:
-    """(table name, LogicalRelation) for every registered-table leaf."""
-    out = []
-    for node in _iter_nodes(root):
-        if node.getClass().getSimpleName() != "LogicalRelation":
-            continue
-        try:
-            roots = node.relation().location().rootPaths()
-        except Exception:
-            continue  # non-file relation
-        names = {
-            name_by_root.get(_bare(roots.apply(j).toString()))
-            for j in range(roots.size())
-        }
-        names.discard(None)
-        if len(names) == 1:
-            out.append((names.pop(), node))
-    return out
-
-
-# Plan-time key-set cache: a dashboard re-issuing the same star query
-# must not pay the bounded dim subquery on every planning (the zone-map
-# manifest caches already made FILE planning free on repeat). Keyed on
-# the CANONICALIZED dim subplan (exprIds normalized, so re-planning the
-# same query text hits) + the key attribute's output position + the
-# key cap; validated against a (mtime, size) stat snapshot of every
-# file the dim subplan reads — the exact invalidation discipline the
-# manifest caches use — so an overwritten or appended dim re-runs the
-# subquery. Subplans reading more than _DPP_CACHE_MAX_FILES files skip
-# caching (stat cost would approach the subquery's own).
-_DPP_KEY_CACHE: dict[tuple, tuple[tuple, tuple]] = {}
-_DPP_CACHE_MAX_FILES = 64
-_DPP_CACHE_MAX_ENTRIES = 256
-DPP_COUNTS = {"evals": 0, "cache_hits": 0}
-
-
-def _dim_stat_snapshot(dim_plan: Any) -> tuple | None:
-    """((file, (mtime, size)), ...) for every file every relation of
-    the dim subplan reads, or None when any relation isn't file-based /
-    a file is missing / the listing is too large to stat cheaply."""
-    from quack_reduce_spark.lake import _fs_for
-
-    files: list[str] = []
-    for node in _iter_nodes(dim_plan):
-        if node.getClass().getSimpleName() != "LogicalRelation":
-            continue
-        try:
-            arr = node.relation().location().inputFiles()
-        except Exception:
-            return None
-        files.extend(str(arr[i]) for i in range(len(arr)))
-    if not files or len(files) > _DPP_CACHE_MAX_FILES:
-        return None
-    out = []
-    for p in sorted(files):
-        lp = _bare(p) if p.startswith("file:") else p
-        key = _fs_for(lp).stat_key(lp)
-        if key is None:
-            return None
-        out.append((p, key))
-    return tuple(out)
-
-
-def _dim_key_values(
-    df: DataFrame, dim_plan: Any, key_attr: Any
-) -> tuple | None:
-    """Evaluate the dim subplan and reduce it to a constraint on its
-    join key: ``('in', values)`` for up to DPP_MAX_KEYS distinct keys,
-    ``('range', lo, hi)`` above that, or None when the side can't be
-    evaluated. Session-zoned timestamp keys are read as unix_micros —
-    the manifest's epoch space — so no collect-time rendering is
-    involved; NULL keys are dropped (an equi join never matches
-    NULL). Results are served from ``_DPP_KEY_CACHE`` on repeat
-    plannings of an unchanged dim side: the second identical star
-    query plans with ZERO Spark jobs, like zone-map planning."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import DataFrame as _PyDF
-
-    spark = df.sparkSession
-    out = dim_plan.output()
-    idx = next(
-        (
-            i
-            for i in range(out.size())
-            if out.apply(i).exprId().id() == key_attr.exprId().id()
-        ),
-        None,
-    )
-    if idx is None:
-        return None
-    snap = _dim_stat_snapshot(dim_plan)
-    cache_key = None
-    if snap is not None:
-        try:
-            canon = dim_plan.canonicalized().toString()
-        except Exception:
-            canon = None
-        if canon is not None:
-            cache_key = (canon, idx, DPP_MAX_KEYS)
-            hit = _DPP_KEY_CACHE.get(cache_key)
-            if hit is not None and hit[0] == snap:
-                DPP_COUNTS["cache_hits"] += 1
-                return hit[1]
-    DPP_COUNTS["evals"] += 1
-    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        df._jdf.sparkSession(), dim_plan
-    )
-    dim = _PyDF(jdf, spark)
-    fresh = dim.toDF(*[f"c{i}" for i in range(len(dim.columns))])
-    key = F.col(f"c{idx}")
-    tname = key_attr.dataType().typeName()
-    if tname == "timestamp":
-        key = F.unix_micros(key)
-    else:
-        from quack_reduce_spark.operators.zonemaps import _unscaled_decimal
-
-        s = _unscaled_decimal(tname)
-        if s is not None:
-            # decimal keys collect in the manifest's unscaled-int
-            # space (exact: integral value <= 18 digits)
-            key = (key * F.lit(10 ** s).cast(f"decimal({s + 1},0)")).cast(
-                "long"
-            )
-    keyed = fresh.select(key.alias("k")).where(F.col("k").isNotNull())
-    rows = keyed.distinct().limit(DPP_MAX_KEYS + 1).collect()
-    if len(rows) <= DPP_MAX_KEYS:
-        got = ("in", frozenset(r["k"] for r in rows))
-    else:
-        agg = keyed.agg(
-            F.min("k").alias("lo"), F.max("k").alias("hi")
-        ).first()
-        got = ("range", agg["lo"], agg["hi"])
-    if cache_key is not None:
-        if len(_DPP_KEY_CACHE) >= _DPP_CACHE_MAX_ENTRIES:
-            _DPP_KEY_CACHE.pop(next(iter(_DPP_KEY_CACHE)))
-        _DPP_KEY_CACHE[cache_key] = (snap, got)
-    return got
-
-
-def join_dim_constraints(
-    df: DataFrame,
-    paths_by_name: dict[str, str],
-    stats_cols_by_name: dict[str, list[str]],
-) -> dict[str, dict]:
-    """Per zone-mapped table: a join-derived constraint
-    ``{col: (lo, hi, vals, None), "n_keys": ...}`` from the OPTIMIZED
-    logical plan's equi joins — the engine intersects it into the fact
-    scan's manifest planning. Fired only when ALL of:
-
-    - the join is Inner/Cross/LeftSemi (fact rows without a dim match
-      never reach the output, so key-based file skipping is sound; for
-      LeftSemi only the LEFT side is prunable — the right side is
-      existence-only either way, but only left rows are output);
-    - the join key on the fact side is a bare attribute of the
-      registered table's relation AND one of its manifest stats
-      columns;
-    - the table's relation appears EXACTLY ONCE in the whole plan (a
-      second scan of the same table must not inherit this join's
-      keys);
-    - the dim side carries a Filter (Spark's own DPP gate: an
-      unfiltered dim prunes nothing worth a plan-time subquery) and
-      its static size estimate is under DPP_DIM_MAX_BYTES.
-
-    Cost: one bounded distinct-collect (or min/max aggregate) over the
-    filtered dim side per qualifying join — the same subquery Spark's
-    DPP executes — against file skipping on the fact side worth
-    ``(1 - selectivity) x fact bytes``. Multiple qualifying joins on
-    the same table intersect."""
-    name_by_root = {_bare(p): n for n, p in paths_by_name.items()}
-    opt = df._jdf.queryExecution().optimizedPlan()
-    rel_counts: dict[str, int] = {}
-    for name, _rel in _table_relations(opt, name_by_root):
-        rel_counts[name] = rel_counts.get(name, 0) + 1
-    out: dict[str, dict] = {}
-    for node in _iter_nodes(opt):
-        if node.getClass().getSimpleName() != "Join":
-            continue
-        orientations = _DPP_ORIENTATIONS.get(node.joinType().toString())
-        if orientations is None:
-            continue
-        cond = node.condition()
-        if not cond.isDefined():
-            continue
-        pairs = _equi_pairs(cond.get())
-        if not pairs:
-            continue
-        by_sel = {"l": node.left(), "r": node.right()}
-        sides = [(by_sel[f], by_sel[d]) for f, d in orientations]
-        for fact_side, dim_side in sides:
-            rels = _table_relations(fact_side, name_by_root)
-            for name, rel in rels:
-                cols = stats_cols_by_name.get(name)
-                if not cols or rel_counts.get(name) != 1:
-                    continue
-                rel_ids = set()
-                rout = rel.output()
-                for i in range(rout.size()):
-                    rel_ids.add(rout.apply(i).exprId().id())
-                for la, ra in pairs:
-                    # orient: which attr sits on the fact side?
-                    fact_attr, dim_attr = la, ra
-                    if fact_attr.exprId().id() not in rel_ids:
-                        fact_attr, dim_attr = ra, la
-                    if fact_attr.exprId().id() not in rel_ids:
-                        continue
-                    if fact_attr.name() not in cols:
-                        continue
-                    if not _dpp_key_type_ok(dim_attr.dataType().typeName()):
-                        continue
-                    dim_filters = [
-                        m
-                        for m in _iter_nodes(dim_side)
-                        if m.getClass().getSimpleName() == "Filter"
-                    ]
-                    if not dim_filters:
-                        continue
-                    # a NON-DETERMINISTIC dim predicate (rand()
-                    # sampling) re-evaluates differently when the
-                    # query executes — the plan-time key set could
-                    # then prune fact files holding rows that WOULD
-                    # join. Same gate as Spark DPP's subquery reuse.
-                    try:
-                        if any(
-                            not flt.condition().deterministic()
-                            for flt in dim_filters
-                        ):
-                            continue
-                    except Exception:
-                        continue  # bridge drift: decline, sound
-                    try:
-                        if int(dim_side.stats().sizeInBytes()) > DPP_DIM_MAX_BYTES:
-                            continue
-                        got = _dim_key_values(df, dim_side, dim_attr)
-                    except Exception:
-                        continue  # bridge drift / unevaluable side
-                    if got is None:
-                        continue
-                    if got[0] == "in":
-                        cons = (None, None, got[1], None)
-                        n_keys: int | None = len(got[1])
-                    else:
-                        cons = (got[1], got[2], None, None)
-                        n_keys = None
-                    entry = out.setdefault(name, {"cols": {}})
-                    col = fact_attr.name()
-                    if col in entry["cols"]:
-                        prev_cons, prev_nk = entry["cols"][col]
-                        nks = [x for x in (prev_nk, n_keys) if x is not None]
-                        entry["cols"][col] = (
-                            _and_constraints(prev_cons, cons),
-                            min(nks) if nks else None,
-                        )
-                    else:
-                        entry["cols"][col] = (cons, n_keys)
-    return out
 
 
 def _and_constraints(a: tuple, b: tuple) -> tuple:
@@ -1007,63 +682,12 @@ def _and_constraints(a: tuple, b: tuple) -> tuple:
     return (lo, hi, None, nullness)
 
 
-def merge_dim_constraint(scans: list[dict], col: str, cons: tuple) -> None:
-    """Intersect a join-derived constraint into EVERY alternative of
-    every scan record of the (single-relation) table — sound because
-    the caller verified the table is scanned exactly once and every
-    output row must carry a surviving join key."""
-    for scan in scans:
-        for alt in scan["alts"]:
-            alt[col] = (
-                _and_constraints(alt[col], cons) if col in alt else cons
-            )
-
-
-_SHUFFLE_JOINS = {"SortMergeJoinExec", "ShuffledHashJoinExec"}
-
-
-def join_scan_tables(df: DataFrame, paths_by_name: dict[str, str]) -> set[str]:
-    """Registered tables scanned UNDER a shuffle join (sort-merge or
-    shuffled-hash) in ``df``'s physical plan — the candidates for an
-    estimate-driven broadcast hint (a side already broadcast needs no
-    help). Best-effort: any bridge drift returns the empty set."""
-    name_by_root = {_bare(p): n for n, p in paths_by_name.items()}
-    out: set[str] = set()
-
-    def scan_names(node: Any) -> set[str]:
-        names: set[str] = set()
-        leaves = node.collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() != "FileSourceScanExec":
-                continue
-            roots = leaf.relation().location().rootPaths()
-            got = {
-                name_by_root.get(_bare(roots.apply(j).toString()))
-                for j in range(roots.size())
-            }
-            got.discard(None)
-            names |= got
-        return names
-
-    plan = df._jdf.queryExecution().sparkPlan()
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() in _SHUFFLE_JOINS:
-            out |= scan_names(node)
-        children = node.children()
-        for i in range(children.size()):
-            stack.append(children.apply(i))
-    return out
-
-
 def plan_pruned_files(
     spark,
     data_dir: str,
     stats_cols: list[str],
     scans: list[dict],
-) -> tuple[list[str], int, dict] | None:
+) -> tuple[list[str], int] | None:
     """Resolve per-scan constraints into ONE surviving file list for
     the table, or None when pruning can't apply (some alternative of
     some scan is unconstrained on every stats column, the manifest is
@@ -1073,13 +697,11 @@ def plan_pruned_files(
     ``{"alts": [{col: (lo, hi, vals, nullness)}, ...], "n_files":
     live_count}``. Within an alternative, columns intersect
     (prune_files_multi); across a scan's alternatives (OR arms) AND
-    across scans, survivor sets union. Returns ``(files, total_files,
-    stats)`` where ``stats`` carries the survivors' summed ``n_rows``
-    / ``file_bytes`` (None when the manifest predates size recording)
-    — the estimate the engine's broadcast-hint decision reads."""
+    across scans, survivor sets union. Returns ``(files,
+    total_files)``."""
     from quack_reduce_spark.operators.zonemaps import prune_files_multi
 
-    union: dict[str, dict] = {}
+    union: set[str] = set()
     total = None
     for scan in scans:
         for bounds in scan["alts"]:
@@ -1089,16 +711,7 @@ def plan_pruned_files(
             rows, total = prune_files_multi(spark, data_dir, usable)
             if scan["n_files"] != total:
                 return None  # manifest stale vs the live file set: refuse
-            for r in rows:
-                union[r["file"]] = r
+            union.update(r["file"] for r in rows)
     if total is None or len(union) >= total:
         return None
-    survivors = sorted(union)
-    sizes = [union[f].get("file_bytes") for f in survivors]
-    stats = {
-        "est_rows": sum(int(union[f]["n_rows"]) for f in survivors),
-        "est_bytes": (
-            sum(int(s) for s in sizes) if all(s is not None for s in sizes) else None
-        ),
-    }
-    return survivors, total, stats
+    return sorted(union), total

@@ -11,6 +11,8 @@ its µs TIMESTAMP, so differential oracles see identical instants.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.utils import AnalysisException
@@ -36,20 +38,37 @@ def _nanos_columns(path: str) -> list[str]:
 #   overwrites are always picked up and every action computes from the
 #   parquet inputs as they are NOW; no data, no results, no plans are
 #   cached.
-# - the key includes the path's mtime: an overwrite that changes the
-#   schema recreates the table root and invalidates the entry.
-# - nanos-bearing tables memoize the RAW (longs) read schema plus the
-#   nanos column list, and a hit replays the exact legacy-conf dance
-#   (set at creation, restore after) + µs conversions; mergeSchema
-#   reads never memoize (schema-evolution dirs must see real footers).
-# value: (raw_read_schema, nanos_column_names)
-_SCHEMA_MEMO: dict[tuple[str, float], tuple] = {}
+# - an entry is valid only for the listing signature it was inferred
+#   from: a single file's own mtime, or for a directory the (relative
+#   path, mtime, size) of every visible file below it — a file
+#   rewritten inside ``a=1/b=2/`` changes neither the root's mtime nor
+#   its first-level entries, but does change the signature. One entry
+#   per path: storing a new signature replaces the superseded one.
+# - nanos-bearing tables memoize the RAW (longs) read schema, whether
+#   it was inferred under nanosAsLong, and the converted column list; a
+#   hit replays the exact legacy-conf dance (set at creation, restore
+#   after) + µs conversions; mergeSchema reads never memoize
+#   (schema-evolution dirs must see real footers).
+# value: (signature, raw_read_schema, needs_nanos_conf, converted_names)
+_SCHEMA_MEMO: dict[str, tuple] = {}
 
 
-def _memo_key(path: str):
-    import os as _os
-
-    return (_os.path.abspath(path), _os.path.getmtime(path))
+def _listing_signature(path: str):
+    """A file's mtime, or every visible data file's (relpath, mtime,
+    size) below a directory — Spark skips ``_``/``.``-prefixed names,
+    so commit markers and manifests never invalidate the schema."""
+    if not os.path.isdir(path):
+        return os.stat(path).st_mtime_ns
+    sig = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.startswith(("_", ".")):
+                continue
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            sig.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+    return tuple(sig)
 
 
 def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
@@ -72,16 +91,17 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
     # fast path: read with the memoized schema — skips the per-call
     # footer re-inference (the dominant component of the session
     # floor); file listing and data decoding stay per-call
-    key = None
+    key = sig = None
     if not merge_schema:
         try:
-            key = _memo_key(path)
+            key = os.path.abspath(path)
+            sig = _listing_signature(path)
         except Exception:
             key = None  # can't stat (glob?) — legacy path, no memo
         hit = _SCHEMA_MEMO.get(key) if key is not None else None
-        if hit is not None:
-            schema, nanos = hit
-            if not nanos:
+        if hit is not None and hit[0] == sig:
+            _sig, schema, needs_nanos, nanos = hit
+            if not needs_nanos:
                 return spark.read.schema(schema).parquet(path)
             prior = spark.conf.get(_NANOS_CONF, None)
             try:
@@ -115,7 +135,8 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
             df = reader.parquet(path)
         raw_schema = df.schema  # BEFORE conversions — what a reader needs
         converted: list[str] = []
-        if spark.conf.get(_NANOS_CONF, "false") == "true":
+        needs_nanos = spark.conf.get(_NANOS_CONF, "false") == "true"
+        if needs_nanos:
             long_cols = {f.name for f in df.schema.fields if f.dataType.typeName() == "long"}
             try:
                 nanos = _nanos_columns(path)
@@ -126,7 +147,7 @@ def read_parquet_table(spark: SparkSession, path: str, merge_schema: bool = Fals
                     df = df.withColumn(name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
                     converted.append(name)
         if key is not None:
-            _SCHEMA_MEMO[key] = (raw_schema, converted)
+            _SCHEMA_MEMO[key] = (sig, raw_schema, needs_nanos, converted)
         return df
     finally:
         if prior is None:

@@ -377,60 +377,6 @@ def test_engine_sql_in_list_prunes_tighter_than_envelope(spark, zm_engine):
     assert d.first()["n"] == raw.where(F.col("o_orderdate").isin(v1, v2)).count()
 
 
-def test_engine_sql_filtered_dim_join_gets_broadcast_hint(spark, sf_dir, tmp_path):
-    """The CBO loop closed on the SQL surface: a sort-merge join whose
-    zone-mapped dim side survives file pruning UNDER the broadcast
-    threshold is re-planned with a broadcast hint — the filtered-dim
-    case static file-size stats get wrong (Filter passes sizeInBytes
-    through, so the full file size hides the tiny slice)."""
-    from quack_reduce_spark.engine import Engine
-    from quack_reduce_spark.operators import zonemaps as Z
-
-    dim_path = str(tmp_path / "dim")
-    fact_path = str(tmp_path / "fact")
-    cust = load(spark, sf_dir, "customer")
-    (
-        cust.repartitionByRange(8, "c_acctbal")
-        .sortWithinPartitions("c_acctbal")
-        .write.mode("overwrite")
-        .parquet(dim_path)
-    )
-    Z.write_zonemap(spark, dim_path, ["c_acctbal"])
-    load(spark, sf_dir, "orders").write.mode("overwrite").parquet(fact_path)
-
-    eng = Engine(spark=spark)
-    eng.register("bj_dim", dim_path)
-    eng.register("bj_fact", fact_path)
-    q = (
-        "SELECT COUNT(*) AS n FROM bj_fact f JOIN bj_dim d "
-        "ON f.o_custkey = d.c_custkey WHERE d.c_acctbal > 9000"
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        # static stats alone: sort-merge (auto-broadcast disabled)
-        assert "SortMergeJoin" in plans.formatted_plan(spark.sql(q))
-        d = eng.df(q)
-        rep = eng.last_zonemap_report["bj_dim"]
-        assert rep["broadcast_hint"] is True
-        assert rep["files_read"] < rep["files_total"]
-        assert rep["est_bytes"] is not None
-        assert "BroadcastHashJoin" in plans.formatted_plan(d)
-        want = (
-            spark.read.parquet(fact_path)
-            .join(
-                spark.read.parquet(dim_path)
-                .filter("c_acctbal > 9000")
-                .withColumnRenamed("c_custkey", "o_custkey"),
-                "o_custkey",
-            )
-            .count()
-        )
-        assert d.first()["n"] == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_engine_sql_timestamp_pruning_in_non_utc_session(spark, sf_dir, tmp_path):
     """The timezone soundness fix: with a non-UTC session zone, a
     session-zoned timestamp literal decodes to the SESSION zone's
@@ -521,20 +467,31 @@ def test_engine_sql_pruning_failure_falls_back_and_restores_views(
     answers correctly — and the session view is restored to the full
     table (no I/O in the restore path, so the failure cannot strand a
     pruned view)."""
+    from pyspark.errors import AnalysisException
+
     from quack_reduce_spark.plans import zonemap_pushdown as _zp
 
     eng, path = zm_engine
     real = _zp.plan_pruned_files
+    bogus = f"{path}/__does_not_exist__.parquet"
+    planned = []
 
     def bad_files(spark_, data_dir, stats_cols, scans):
         got = real(spark_, data_dir, stats_cols, scans)
         if got is None:
             return None
-        files, total, stats = got
-        return ([f"{path}/__does_not_exist__.parquet"], total, stats)
+        files, total = got
+        planned.append(total)
+        return ([bogus], total)
 
     monkeypatch.setattr(_zp, "plan_pruned_files", bad_files)
     d = eng.df(RANGE_Q)
+    # planning itself succeeded and handed a surviving-file set to the
+    # rebind window, so the fallback below can only come from the
+    # rebind: reading the vanished file is what raises there
+    assert planned
+    with pytest.raises(AnalysisException):
+        spark.read.option("basePath", path).parquet(bogus)
     assert eng.last_zonemap_report == {}  # fell back: nothing to report
     got = {(r[0], r[1]) for r in d.collect()}
     monkeypatch.undo()
@@ -748,14 +705,11 @@ def test_engine_sql_hive_partitions_compose_with_zonemap_pruning(
     assert all("o_year=1997" in f for f in data_inputs)
 
 
-def test_engine_sql_hint_on_unbroadcastable_side_is_harmless(
-    spark, sf_dir, tmp_path
-):
-    """Hints never change semantics: when the file-pruned (hinted)
-    table is the LEFT side of a LEFT OUTER join — a side Spark cannot
-    broadcast — the planner ignores the hint and the engine's answer
-    still equals the plain computation, with pruning telemetry
-    intact."""
+def test_engine_sql_left_join_prunes_filtered_dim(spark, sf_dir, tmp_path):
+    """Per-scan pruning under an outer join: a zone-mapped dim filtered
+    on its stats column is the PRESERVED side of a LEFT JOIN, so its
+    own WHERE prunes its files, and the engine's answer equals the
+    plain left join."""
     from quack_reduce_spark.engine import Engine
     from quack_reduce_spark.operators import zonemaps as Z
 
@@ -778,22 +732,14 @@ def test_engine_sql_hint_on_unbroadcastable_side_is_harmless(
         "FROM lj_dim d LEFT JOIN lj_fact f ON d.c_custkey = f.o_custkey "
         "WHERE d.c_acctbal > 9000"
     )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        d = eng.df(q)
-        got = d.first()
-        dim = spark.read.parquet(dim_path).filter("c_acctbal > 9000")
-        fact = spark.read.parquet(fact_path).withColumnRenamed(
-            "o_custkey", "c_custkey"
-        )
-        joined = dim.join(fact, "c_custkey", "left")
-        assert got["n"] == joined.count()
-        assert got["matched"] == joined.filter("o_orderkey IS NOT NULL").count()
-        rep = eng.last_zonemap_report.get("lj_dim")
-        assert rep is not None and rep["files_read"] < rep["files_total"]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    got = eng.df(q).first()
+    rep = eng.last_zonemap_report.get("lj_dim")
+    assert rep is not None and rep["files_read"] < rep["files_total"]
+    dim = spark.read.parquet(dim_path).filter("c_acctbal > 9000")
+    fact = spark.read.parquet(fact_path).withColumnRenamed("o_custkey", "c_custkey")
+    joined = dim.join(fact, "c_custkey", "left")
+    assert got["n"] == joined.count()
+    assert got["matched"] == joined.filter("o_orderkey IS NOT NULL").count()
 
 
 def test_engine_sql_large_in_list_inset_prunes(spark, zm_engine):
@@ -1068,458 +1014,6 @@ def test_explain_join_serves_manifest_stats_without_scan(spark, sf_dir, tmp_path
         spark.catalog.dropTempView(v)
 
 
-def test_plan_join_injects_bloom_runtime_filter(spark, sf_dir):
-    """When neither side broadcasts and the estimate says the join is
-    selective, plan_join builds a sized Bloom bitset from the small
-    side's keys and pre-filters the BIG side before its shuffle —
-    Spark's AQE runtime bloom join, engine-portable. Results are
-    row-identical to the plain join (false positives re-checked by the
-    join; no false negatives by construction), and the deterministic
-    rebuild of the same bitset shows most probe rows never reach the
-    exchange."""
-    from quack_reduce_spark.engine import Engine
-    from quack_reduce_spark.operators.sketches import (
-        BLOOM_SIZED_K,
-        bloom_filter_frame,
-        bloom_size,
-        bloom_words,
-    )
-
-    li = load(spark, sf_dir, "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    od = load(spark, sf_dir, "orders").filter("o_orderkey <= 150").select(
-        "o_orderkey", "o_totalprice"
-    )
-    eng = Engine(spark=spark)
-    joined = eng.plan_join(li, od, "o_orderkey", broadcast_threshold_bytes=0)
-    rep = eng.last_join_plan
-    assert rep["strategy"] == "shuffle_sort_merge"
-    rf = rep.get("runtime_filter")
-    assert rf is not None and rf["side"] == "left"
-    plain = li.join(od, "o_orderkey")
-    assert joined.count() == plain.count() > 0
-    # shuffle-reduction evidence: the identical (deterministic md5)
-    # bitset passes only a small fraction of the probe side
-    words_n, m = bloom_size(rep["right"]["rows"])
-    by_idx = {
-        int(r["word_idx"]): int(r["word"])
-        for r in bloom_words(od.select("o_orderkey"), "o_orderkey", m=m, k=BLOOM_SIZED_K).collect()
-    }
-    words = [by_idx.get(i, 0) for i in range(words_n)]
-    passed = (
-        bloom_filter_frame(li, words, F.col("o_orderkey").cast("string"), k=BLOOM_SIZED_K)
-        .filter("bp")
-        .count()
-    )
-    assert passed * 3 <= li.count()  # >= 2/3 of the shuffle input gone
-
-
-def test_plan_join_runtime_filter_skipped_when_unselective(spark, sf_dir):
-    """A non-selective shuffle join (every probe key matches) must NOT
-    pay for a runtime filter: the estimate gate leaves the join
-    untouched."""
-    from quack_reduce_spark.engine import Engine
-
-    li = load(spark, sf_dir, "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    od = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    eng = Engine(spark=spark)
-    joined = eng.plan_join(li, od, "o_orderkey", broadcast_threshold_bytes=0)
-    assert "runtime_filter" not in eng.last_join_plan
-    assert joined.count() == li.join(od, "o_orderkey").count()
-
-
-def test_plan_join_runtime_filter_tolerates_null_build_keys(spark, sf_dir):
-    """NULL join keys on the build side never match an inner join, but
-    md5(NULL) used to poison the word aggregation with a (NULL, NULL)
-    group row and crash the bitset fold — they are now dropped before
-    folding, and the join stays row-identical to the plain join."""
-    from quack_reduce_spark.engine import Engine
-
-    li = load(spark, sf_dir, "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    od = (
-        load(spark, sf_dir, "orders")
-        .filter("o_orderkey <= 150")
-        .select("o_orderkey", "o_totalprice")
-        .unionByName(
-            spark.createDataFrame(
-                [(None, 1.0), (None, 2.0)],
-                "o_orderkey long, o_totalprice double",
-            )
-        )
-    )
-    eng = Engine(spark=spark)
-    joined = eng.plan_join(li, od, "o_orderkey", broadcast_threshold_bytes=0)
-    assert eng.last_join_plan.get("runtime_filter") is not None
-    assert joined.count() == li.join(od, "o_orderkey").count() > 0
-
-
-# -- dynamic file pruning from join dimensions (DPP on manifests) ------------
-
-
-@pytest.fixture(scope="module")
-def dpp_engine(spark, sf_dir, tmp_path_factory):
-    """An Engine with a custkey-clustered, zone-mapped orders copy
-    (``dpp_fact``, 12 files) and the raw customer fixture
-    (``dpp_dim``) registered — the star shape whose only predicate
-    lives on the dim side."""
-    from quack_reduce_spark.engine import Engine
-    from quack_reduce_spark.operators import zonemaps as Z
-
-    path = str(tmp_path_factory.mktemp("dpp") / "orders")
-    orders = load(spark, sf_dir, "orders")
-    (
-        orders.repartitionByRange(12, "o_custkey")
-        .sortWithinPartitions("o_custkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    Z.write_zonemap(spark, path, ["o_custkey"])
-    eng = Engine(spark=spark)
-    eng.register("dpp_fact", path)
-    eng.register("dpp_dim", f"{sf_dir}/customer.parquet")
-    return eng, path
-
-
-DPP_Q = (
-    "SELECT o_orderstatus, COUNT(*) AS n FROM dpp_fact "
-    "JOIN dpp_dim ON o_custkey = c_custkey "
-    "WHERE c_name LIKE 'Customer#00000000%' GROUP BY o_orderstatus"
-)
-
-
-def test_engine_sql_dpp_prunes_fact_from_dim_filter(spark, sf_dir, dpp_engine):
-    """The round-12 headline: a star query whose ONLY predicate sits on
-    the dim side (a non-key column, so Catalyst cannot infer a fact
-    constraint) still skips fact files — the engine derives the
-    surviving join-key set from the dim subplan at plan time and
-    intersects it into the fact scan's manifest planning. Keys 0..9
-    (the 8-zero name prefix) live in one of 12 custkey-clustered
-    files; the answer equals the plain join."""
-    eng, path = dpp_engine
-    d = eng.df(DPP_Q)
-    rep = eng.last_zonemap_report.get("dpp_fact")
-    assert rep is not None
-    assert rep["dpp"] == {"o_custkey": 10}
-    assert rep["files_read"] * 4 <= rep["files_total"] == 12
-    f = spark.read.parquet(path)
-    cust = load(spark, sf_dir, "customer").filter(
-        "c_name LIKE 'Customer#00000000%'"
-    )
-    want = sorted(
-        (r[0], r[1])
-        for r in f.join(cust, f.o_custkey == cust.c_custkey)
-        .groupBy("o_orderstatus")
-        .count()
-        .collect()
-    )
-    assert sorted((r[0], r[1]) for r in d.collect()) == want
-
-
-def test_engine_sql_dpp_envelope_fallback_above_key_cap(
-    spark, sf_dir, dpp_engine, monkeypatch
-):
-    """Past DPP_MAX_KEYS distinct dim keys the constraint degrades to
-    the [min, max] envelope (n_keys reported as None) — still pruning
-    on a clustered layout, still row-identical."""
-    from quack_reduce_spark.plans import zonemap_pushdown as _zp
-
-    monkeypatch.setattr(_zp, "DPP_MAX_KEYS", 4)
-    eng, path = dpp_engine
-    d = eng.df(DPP_Q)
-    rep = eng.last_zonemap_report.get("dpp_fact")
-    assert rep is not None and rep["dpp"] == {"o_custkey": None}
-    assert rep["files_read"] * 4 <= rep["files_total"]
-    f = spark.read.parquet(path)
-    cust = load(spark, sf_dir, "customer").filter(
-        "c_name LIKE 'Customer#00000000%'"
-    )
-    want = (
-        f.join(cust, f.o_custkey == cust.c_custkey)
-        .groupBy()
-        .count()
-        .first()[0]
-    )
-    assert sum(r["n"] for r in d.collect()) == want
-
-
-def test_engine_sql_dpp_skips_twice_scanned_table(spark, sf_dir, dpp_engine):
-    """Soundness gate: when the zone-mapped table appears twice in the
-    plan (here a self-join through two alias scans), the join-derived
-    key set of ONE scan must not prune the other — DPP declines and
-    the answer equals the plain computation."""
-    eng, path = dpp_engine
-    q = (
-        "SELECT COUNT(*) AS n FROM dpp_fact a "
-        "JOIN dpp_fact b ON a.o_orderkey = b.o_orderkey "
-        "JOIN dpp_dim ON a.o_custkey = c_custkey "
-        "WHERE c_name LIKE 'Customer#00000000%'"
-    )
-    d = eng.df(q)
-    rep = eng.last_zonemap_report.get("dpp_fact")
-    assert rep is None or "dpp" not in rep
-    f = spark.read.parquet(path)
-    cust = load(spark, sf_dir, "customer").filter(
-        "c_name LIKE 'Customer#00000000%'"
-    )
-    want = (
-        f.alias("a")
-        .join(f.alias("b"), F.col("a.o_orderkey") == F.col("b.o_orderkey"))
-        .join(cust, F.col("a.o_custkey") == cust.c_custkey)
-        .count()
-    )
-    assert d.first()["n"] == want
-
-
-def test_engine_sql_dpp_outer_join_untouched(spark, sf_dir, dpp_engine):
-    """A LEFT OUTER star (fact preserved) must not prune fact files by
-    dim keys — unmatched fact rows belong in the output. DPP declines;
-    the answer keeps every fact row."""
-    eng, path = dpp_engine
-    q = (
-        "SELECT COUNT(*) AS n FROM dpp_fact "
-        "LEFT JOIN (SELECT * FROM dpp_dim "
-        "           WHERE c_name LIKE 'Customer#00000000%') d "
-        "ON o_custkey = d.c_custkey"
-    )
-    d = eng.df(q)
-    rep = eng.last_zonemap_report.get("dpp_fact")
-    assert rep is None or "dpp" not in rep
-    assert d.first()["n"] == spark.read.parquet(path).count()
-
-
-def test_engine_sql_dpp_key_set_cached_across_plannings(
-    spark, sf_dir, dpp_engine
-):
-    """A dashboard re-issuing the same star query must not pay the
-    plan-time dim subquery each time: the second identical planning
-    serves the key set from the canonicalized-subplan cache (validated
-    against a stat snapshot of the dim's files), runs NO new subquery
-    evaluation, and produces the identical pruning report and rows."""
-    from quack_reduce_spark.plans import zonemap_pushdown as _zp
-
-    eng, path = dpp_engine
-    _zp._DPP_KEY_CACHE.clear()
-    e0 = _zp.DPP_COUNTS["evals"]
-    h0 = _zp.DPP_COUNTS["cache_hits"]
-    d1 = eng.df(DPP_Q)
-    rep1 = eng.last_zonemap_report.get("dpp_fact")
-    assert rep1 is not None and rep1["dpp"] == {"o_custkey": 10}
-    assert _zp.DPP_COUNTS["evals"] == e0 + 1
-    d2 = eng.df(DPP_Q)
-    rep2 = eng.last_zonemap_report.get("dpp_fact")
-    assert rep2 == rep1
-    assert _zp.DPP_COUNTS["evals"] == e0 + 1  # no second subquery
-    assert _zp.DPP_COUNTS["cache_hits"] >= h0 + 1
-    assert sorted(map(tuple, d1.collect())) == sorted(map(tuple, d2.collect()))
-
-
-def test_engine_sql_dpp_cache_invalidated_by_dim_change(spark, sf_dir, tmp_path):
-    """The key-set cache is content-addressed: rewriting the dim table
-    (new mtime/size) must MISS and re-derive the keys — a stale set
-    would prune fact files that now join. The second planning reflects
-    the new qualifying keys exactly."""
-    from quack_reduce_spark.engine import Engine
-    from quack_reduce_spark.operators import zonemaps as Z
-    from quack_reduce_spark.plans import zonemap_pushdown as _zp
-
-    fact_path = str(tmp_path / "fact")
-    orders = load(spark, sf_dir, "orders")
-    (
-        orders.repartitionByRange(12, "o_custkey")
-        .sortWithinPartitions("o_custkey")
-        .write.mode("overwrite")
-        .parquet(fact_path)
-    )
-    Z.write_zonemap(spark, fact_path, ["o_custkey"])
-    dim_path = str(tmp_path / "dim")
-    spark.createDataFrame(
-        [(k, "PICK") for k in range(1, 6)], "k long, tag string"
-    ).coalesce(1).write.mode("overwrite").parquet(dim_path)
-    eng = Engine(spark=spark)
-    eng.register("cfact", fact_path)
-    eng.register("cdim", dim_path)
-    q = (
-        "SELECT COUNT(*) AS n FROM cfact JOIN cdim ON o_custkey = k "
-        "WHERE tag = 'PICK'"
-    )
-    f = spark.read.parquet(fact_path)
-    n1 = eng.df(q).first()["n"]
-    assert n1 == f.filter(F.col("o_custkey").between(1, 5)).count()
-    e1 = _zp.DPP_COUNTS["evals"]
-    # rewrite the dim with a DIFFERENT qualifying key set
-    spark.createDataFrame(
-        [(k, "PICK") for k in range(200, 206)], "k long, tag string"
-    ).coalesce(1).write.mode("overwrite").parquet(dim_path)
-    eng.register("cdim", dim_path)  # rebind the view to the new listing
-    n2 = eng.df(q).first()["n"]
-    assert _zp.DPP_COUNTS["evals"] > e1  # cache missed, keys re-derived
-    assert n2 == f.filter(F.col("o_custkey").between(200, 205)).count()
-    assert n2 != n1
-    spark.catalog.dropTempView("cfact")
-    spark.catalog.dropTempView("cdim")
-
-
-def test_engine_sql_dpp_row_filter_prefilters_shuffled_fact(
-    spark, sf_dir, tmp_path
-):
-    """Round 13: the runtime-filter idea on the SQL surface, exact
-    instead of Bloom. A star whose fact is NOT clustered by the join
-    key (min/max spans everything -> zero files skippable) under a
-    SHUFFLED join (broadcast disabled) still pre-filters: DPP's
-    bounded key set becomes a row-level IN on the rebound fact view,
-    pushed into the parquet scan, so rows that provably cannot join
-    never enter the exchange. Results stay row-identical."""
-    from quack_reduce_spark.engine import Engine
-    from quack_reduce_spark.operators import zonemaps as Z
-
-    path = str(tmp_path / "rowflt")
-    orders = load(spark, sf_dir, "orders")
-    orders.repartition(12, "o_orderkey").write.mode("overwrite").parquet(path)
-    Z.write_zonemap(spark, path, ["o_custkey"])
-    eng = Engine(spark=spark)
-    eng.register("rf_fact", path)
-    eng.register("rf_dim", f"{sf_dir}/customer.parquet")
-    thr0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        q = (
-            "SELECT o_orderstatus, COUNT(*) AS n FROM rf_fact "
-            "JOIN rf_dim ON o_custkey = c_custkey "
-            "WHERE c_name LIKE 'Customer#00000000%' GROUP BY o_orderstatus"
-        )
-        d = eng.df(q)
-        rep = eng.last_zonemap_report.get("rf_fact")
-        assert rep is not None
-        assert rep.get("dpp_row_filter") == {"o_custkey": 10}
-        assert "files_read" not in rep  # no file was skippable
-        phys = d._jdf.queryExecution().executedPlan().toString()
-        assert "In(o_custkey" in phys  # pushed into the fact scan
-        f = spark.read.parquet(path)
-        cust = load(spark, sf_dir, "customer").filter(
-            "c_name LIKE 'Customer#00000000%'"
-        )
-        want = sorted(
-            (r[0], r[1])
-            for r in f.join(cust, f.o_custkey == cust.c_custkey)
-            .groupBy("o_orderstatus")
-            .count()
-            .collect()
-        )
-        assert sorted((r[0], r[1]) for r in d.collect()) == want
-        # the filter is worth the compare: almost no fact row survives
-        keys = [r[0] for r in cust.select("c_custkey").collect()]
-        passing = f.filter(F.col("o_custkey").isin(keys)).count()
-        assert passing * 10 <= f.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr0)
-        spark.catalog.dropTempView("rf_fact")
-        spark.catalog.dropTempView("rf_dim")
-
-
-def test_engine_sql_dpp_decimal_join_key(spark, sf_dir, tmp_path):
-    """DPP over a DECIMAL join key: the dim's keys collect in the
-    manifest's unscaled-int space, prune the price-clustered fact's
-    files, and (under a shuffled join) become an exact row filter in
-    the same space — answer identical to the plain join."""
-    from quack_reduce_spark.engine import Engine
-    from quack_reduce_spark.operators import zonemaps as Z
-
-    path = str(tmp_path / "decdpp")
-    orders = load(spark, sf_dir, "orders").withColumn(
-        "price", F.col("o_totalprice").cast("decimal(12,2)")
-    )
-    (
-        orders.repartitionByRange(12, "price")
-        .sortWithinPartitions("price")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    Z.write_zonemap(spark, path, ["price"])
-    full = spark.read.parquet(path)
-    dim_vals = [r[0] for r in full.select("price").orderBy("price").limit(8).collect()]
-    dim = spark.createDataFrame(
-        [(v, "PICK") for v in dim_vals], "k decimal(12,2), tag string"
-    )
-    dim_path = str(tmp_path / "decdim")
-    dim.coalesce(1).write.mode("overwrite").parquet(dim_path)
-    eng = Engine(spark=spark)
-    eng.register("ddp_fact", path)
-    eng.register("ddp_dim", dim_path)
-    q = (
-        "SELECT COUNT(*) AS n FROM ddp_fact JOIN ddp_dim ON price = k "
-        "WHERE tag = 'PICK'"
-    )
-    d = eng.df(q)
-    rep = eng.last_zonemap_report.get("ddp_fact")
-    assert rep is not None and rep.get("dpp") == {"price": len(set(dim_vals))}
-    assert rep["files_read"] * 4 <= rep["files_total"] == 12
-    want = full.join(dim, full.price == dim.k).count()
-    assert d.first()["n"] == want > 0
-    spark.catalog.dropTempView("ddp_fact")
-    spark.catalog.dropTempView("ddp_dim")
-
-
-def test_engine_sql_dpp_left_outer_prunes_non_preserved_side(
-    spark, sf_dir, dpp_engine
-):
-    """The SOUND half of outer-join DPP: in ``filtered LEFT JOIN big``
-    the RIGHT side is prunable — unmatched right rows never surface in
-    a left outer join — so the zone-mapped table on the non-preserved
-    side still skips files by the left side's plan-time key set. Every
-    left row is preserved (COUNT(*) counts the unmatched ones too), so
-    row-identity against the plain left join proves soundness."""
-    eng, path = dpp_engine
-    q = (
-        "SELECT COUNT(*) AS n FROM "
-        "(SELECT * FROM dpp_dim WHERE c_name LIKE 'Customer#00000000%') d "
-        "LEFT JOIN dpp_fact ON o_custkey = d.c_custkey"
-    )
-    d = eng.df(q)
-    rep = eng.last_zonemap_report.get("dpp_fact")
-    assert rep is not None and rep.get("dpp") == {"o_custkey": 10}
-    assert rep["files_read"] * 4 <= rep["files_total"] == 12
-    f = spark.read.parquet(path)
-    cust = load(spark, sf_dir, "customer").filter(
-        "c_name LIKE 'Customer#00000000%'"
-    )
-    want = cust.join(f, cust.c_custkey == f.o_custkey, "left").count()
-    assert d.first()["n"] == want > 0
-
-
-def test_engine_sql_dpp_declines_nondeterministic_dim_filter(
-    spark, sf_dir, dpp_engine
-):
-    """A dim predicate containing rand() re-evaluates differently when
-    the query executes, so a plan-time key set could prune fact files
-    holding rows that WOULD join — the planner must decline (the same
-    gate Spark DPP's subquery reuse applies). The threshold sits at
-    0.999999 so the optimizer cannot fold the conjunct away (a
-    provably-true rand() >= 0 gets eliminated and DPP rightly fires);
-    with 10 qualifying dim rows the filter keeps all of them, so the
-    answer still equals the plain filtered join."""
-    eng, path = dpp_engine
-    q = (
-        "SELECT COUNT(*) AS n FROM dpp_fact JOIN "
-        "(SELECT * FROM dpp_dim "
-        " WHERE c_name LIKE 'Customer#00000000%' AND rand(42) < 0.999999) d "
-        "ON o_custkey = d.c_custkey"
-    )
-    d = eng.df(q)
-    rep = eng.last_zonemap_report.get("dpp_fact")
-    assert rep is None or "dpp" not in rep
-    f = spark.read.parquet(path)
-    cust = load(spark, sf_dir, "customer").filter(
-        "c_name LIKE 'Customer#00000000%'"
-    )
-    want = f.join(cust, f.o_custkey == cust.c_custkey).count()
-    assert d.first()["n"] == want > 0
-
-
 # -- per-file Bloom fingerprints through the SQL surface ----------------------
 
 
@@ -1552,96 +1046,56 @@ def test_engine_sql_point_lookup_prunes_via_bloom(spark, sf_dir, tmp_path):
     spark.catalog.dropTempView("blm_t")
 
 
-def test_engine_sql_dpp_and_bloom_prune_unclustered_fact(spark, sf_dir, tmp_path):
-    """The two round-12 features COMPOSE: a star query filtering only
-    the dim side, over a fact that is NOT clustered by the join key,
-    still skips fact files — DPP derives the surviving join-key set
-    from the dim subplan, and the per-file Bloom fingerprint (not the
-    useless min/max envelope) tests it against each file."""
+# -- star queries run on Spark's native join plan ---------------------------
+
+
+def test_engine_sql_star_planning_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """A star whose only predicate sits on a non-key dim column, over a
+    custkey-clustered, zone-mapped fact (the ``lake_dpp_star`` shape):
+    planning through ``Engine.df`` runs no Spark job — no dim-driven
+    file skipping is planned — and the rows equal
+    the plain join. The dim is a fresh copy, so no earlier planning of
+    it is cached anywhere; the fact's manifest is read once beforehand
+    (the inferred ``o_custkey IS NOT NULL`` makes per-scan planning
+    consult it, and the first read of a manifest is a Spark job)."""
     from quack_reduce_spark.engine import Engine
     from quack_reduce_spark.operators import zonemaps as Z
 
-    path = str(tmp_path / "fact_blm")
-    # one order per customer, round-robin across 12 files: each file
-    # holds ~1/12th of the custkeys, in no particular order
-    fact = load(spark, sf_dir, "orders").dropDuplicates(["o_custkey"])
-    fact.repartition(12).write.mode("overwrite").parquet(path)
-    Z.write_zonemap(spark, path, ["o_custkey"], bloom_cols=["o_custkey"])
-    eng = Engine(spark=spark)
-    eng.register("fblm", path)
-    eng.register("dblm", f"{sf_dir}/customer.parquet")
-    # exactly ONE dim row survives the filter -> one join key -> the
-    # bloom probe keeps only the file(s) that can hold that key
-    one = load(spark, sf_dir, "customer").select("c_name").orderBy("c_custkey").first()[0]
-    d = eng.df(
-        "SELECT COUNT(*) AS n FROM fblm JOIN dblm ON o_custkey = c_custkey "
-        f"WHERE c_name = '{one}'"
-    )
-    got = d.first()["n"]
-    rep = eng.last_zonemap_report.get("fblm")
-    assert rep is not None and rep.get("dpp") == {"o_custkey": 1}
-    assert rep["files_read"] <= 3 < rep["files_total"] == 12
-    cust = load(spark, sf_dir, "customer").filter(F.col("c_name") == one)
-    want = (
-        spark.read.parquet(path)
-        .join(cust, F.col("o_custkey") == cust.c_custkey)
-        .count()
-    )
-    assert got == want == 1
-    for v in ("fblm", "dblm"):
-        spark.catalog.dropTempView(v)
-
-
-def test_engine_sql_dpp_two_dims_intersect(spark, sf_dir, tmp_path):
-    """Two filtered dims joined on DIFFERENT fact columns: each join
-    contributes its own key-set constraint and the fact scan applies
-    BOTH — files must satisfy each to survive — and the answer equals
-    the plain two-join computation."""
-    from quack_reduce_spark.engine import Engine
-    from quack_reduce_spark.operators import zonemaps as Z
-
-    path = str(tmp_path / "dpp2")
-    orders = load(spark, sf_dir, "orders")
+    fact_path = str(tmp_path / "fact")
     (
-        orders.repartitionByRange(12, "o_custkey")
+        load(spark, sf_dir, "orders")
+        .repartitionByRange(12, "o_custkey")
         .sortWithinPartitions("o_custkey")
         .write.mode("overwrite")
-        .parquet(path)
+        .parquet(fact_path)
     )
-    Z.write_zonemap(spark, path, ["o_custkey", "o_orderkey"])
-    # second dim: an orderkey list derived from lineitem (filtered)
-    okdim = str(tmp_path / "okdim")
-    li = load(spark, sf_dir, "lineitem")
-    (
-        li.select(F.col("l_orderkey").alias("d_orderkey"), "l_quantity")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(okdim)
-    )
+    Z.write_zonemap(spark, fact_path, ["o_custkey"])
+    dim_path = str(tmp_path / "dim")
+    load(spark, sf_dir, "customer").write.mode("overwrite").parquet(dim_path)
     eng = Engine(spark=spark)
-    eng.register("dpp2_f", path)
-    eng.register("dpp2_c", f"{sf_dir}/customer.parquet")
-    eng.register("dpp2_k", okdim)
+    eng.register("star_f", fact_path)
+    eng.register("star_d", dim_path)
     q = (
-        "SELECT COUNT(*) AS n FROM dpp2_f "
-        "JOIN dpp2_c ON o_custkey = c_custkey "
-        "JOIN dpp2_k ON o_orderkey = d_orderkey "
-        "WHERE c_name LIKE 'Customer#00000000%' AND l_quantity >= 49"
+        "SELECT o_orderstatus, COUNT(*) AS n FROM star_f "
+        "JOIN star_d ON o_custkey = c_custkey "
+        "WHERE c_name LIKE 'Customer#00000000%' GROUP BY o_orderstatus"
     )
+    eng.df("SELECT o_orderstatus FROM star_f WHERE o_custkey IS NOT NULL")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     d = eng.df(q)
-    rep = eng.last_zonemap_report.get("dpp2_f")
-    assert rep is not None and set(rep.get("dpp", {})) == {"o_custkey", "o_orderkey"}
-    assert rep["files_read"] < rep["files_total"] == 12
-    f = spark.read.parquet(path)
-    cust = load(spark, sf_dir, "customer").filter(
-        "c_name LIKE 'Customer#00000000%'"
-    )
-    kd = spark.read.parquet(okdim).filter("l_quantity >= 49")
-    want = (
-        f.join(cust, f.o_custkey == cust.c_custkey)
-        .join(kd, f.o_orderkey == kd.d_orderkey)
+    # a set difference, not a length: the status store keeps only the
+    # newest jobs, so over a long session its length stops growing
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    f = spark.read.parquet(fact_path)
+    cust = spark.read.parquet(dim_path).filter("c_name LIKE 'Customer#00000000%'")
+    want = sorted(
+        (r[0], r[1])
+        for r in f.join(cust, f.o_custkey == cust.c_custkey)
+        .groupBy("o_orderstatus")
         .count()
+        .collect()
     )
-    assert d.first()["n"] == want
-    for v in ("dpp2_f", "dpp2_c", "dpp2_k"):
+    assert sorted((r[0], r[1]) for r in d.collect()) == want != []
+    for v in ("star_f", "star_d"):
         spark.catalog.dropTempView(v)

@@ -176,3 +176,27 @@ def test_configure_s3a_builder_options():
     assert "DefaultAWSCredentialsProviderChain" in opts[
         "spark.hadoop.fs.s3a.aws.credentials.provider"
     ]
+
+
+def test_schema_memo_sees_rewrite_inside_nested_partition(spark, tmp_path):
+    # a file rewritten inside a=1/b=2/ changes neither the table root's
+    # mtime nor its first-level entries; the memoized schema must still
+    # be re-inferred, so the next read shows the added column
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "nested"
+    leaf = root / "a=1" / "b=2"
+    leaf.mkdir(parents=True)
+    part = str(leaf / "part-0.parquet")
+    pq.write_table(pa.table({"x": [1, 2]}), part)
+    before = read_parquet_table(spark, str(root))
+    assert set(before.columns) == {"x", "a", "b"}
+    root_mtime = os.stat(root).st_mtime_ns
+    pq.write_table(pa.table({"x": [3, 4], "y": ["p", "q"]}), part)
+    assert os.stat(root).st_mtime_ns == root_mtime
+    after = read_parquet_table(spark, str(root))
+    assert set(after.columns) == {"x", "y", "a", "b"}
+    assert sorted(r["y"] for r in after.collect()) == ["p", "q"]

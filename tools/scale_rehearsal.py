@@ -104,9 +104,6 @@ ALL_FAMILIES = [
     # must stay as flat as the raw scan_pruned probe (rides the
     # lake_zonemap_probe fixtures)
     "engine_sql_pruned",
-    # round-12 addition: dim-driven dynamic file pruning (DPP on
-    # manifests) vs a fact growing 1->10x with a FIXED dim predicate
-    "lake_dpp_probe",
     # round-12 addition: per-file Bloom fingerprint point lookup vs a
     # growing UNCLUSTERED table (envelopes span everything at every
     # size; only the fingerprints prune)
@@ -902,85 +899,6 @@ def main() -> None:
                 file=sys.stderr,
             )
 
-        # ---- DPP probe: dim-driven fact pruning vs a growing fact -----
-        # The FACT grows 1→10x by custkey-OFFSET replicas (replica r
-        # holds custkeys +r·10^7, so only replica 0 can match any real
-        # customer key), custkey-clustered at 12 files per replica and
-        # zone-mapped. The star query's ONLY predicate is a fixed
-        # dim-side name prefix (custkeys 1..9, all in replica 0): the
-        # join-derived key set must keep fact files_read FLAT while the
-        # fact and its file count grow linearly — Spark's Dynamic
-        # Partition Pruning claim, on manifests. The plan-time dim
-        # subquery is a fixed cost (the dim does not grow), so total
-        # time should stay flat too.
-        if "lake_dpp_probe" in wanted:
-            from quack_reduce_spark.engine import Engine as _Eng
-            from quack_reduce_spark.operators import zonemaps as Z3
-
-            n_base = orders.count()
-            ns, ts, freads, ftotals = [], [], [], []
-            for m in MULTS:
-                reps = spark.range(m).select(F.col("id").alias("__rep"))
-                rep_orders = orders.crossJoin(reps).select(
-                    (F.col("o_orderkey") + F.col("__rep") * 100_000_000).alias(
-                        "o_orderkey"
-                    ),
-                    (F.col("o_custkey") + F.col("__rep") * 10_000_000).alias(
-                        "o_custkey"
-                    ),
-                    "o_orderstatus",
-                    "o_totalprice",
-                )
-                zpath = f"{tmp}/dpp_orders_x{m}"
-                (
-                    rep_orders.repartitionByRange(12 * m, "o_custkey")
-                    .sortWithinPartitions("o_custkey")
-                    .write.mode("overwrite")
-                    .parquet(zpath)
-                )
-                Z3.write_zonemap(spark, zpath, ["o_custkey"])
-                eng = _Eng(spark=spark)
-                fact, dimv = f"dppreh_f_x{m}", f"dppreh_d_x{m}"
-                eng.register(fact, zpath)
-                eng.register(dimv, f"{sf_dir.rstrip('/')}/customer.parquet")
-                q = (
-                    f"SELECT o_orderstatus, COUNT(*) AS n,"
-                    f" SUM(o_totalprice) AS s FROM {fact}"
-                    f" JOIN {dimv} ON o_custkey = c_custkey"
-                    f" WHERE c_name LIKE 'Customer#00000000%'"
-                    f" GROUP BY 1"
-                )
-
-                def dpp_probe(eng=eng, q=q):
-                    def thunk():
-                        eng.df(q).collect()
-                    return thunk
-
-                dpp_probe()()  # warm (fills the manifest caches)
-                t = _timed(dpp_probe())
-                rep = eng.last_zonemap_report.get(fact) or {}
-                assert rep.get("dpp"), f"DPP did not fire at mult {m}: {rep}"
-                ns.append(n_base * m)
-                ts.append(round(t, 3))
-                freads.append(rep.get("files_read"))
-                ftotals.append(rep.get("files_total"))
-            results["lake_dpp_probe"] = {
-                "mults": MULTS,
-                "rows": ns,
-                "sec": ts,
-                "files_read": freads,
-                "files_total": ftotals,
-                "fit_exp": round(_fit_exponent(ns, ts), 3),
-                "tail_exp": round(
-                    math.log(ts[-1] / ts[-2]) / math.log(MULTS[-1] / MULTS[-2]), 3
-                ),
-            }
-            print(
-                f"  lake_dpp_probe: {ts} read/total "
-                f"{list(zip(freads, ftotals))}",
-                file=sys.stderr,
-            )
-
         # ---- Bloom probe: point lookup vs a growing random table ------
         # The table grows 1→10x by orderkey-OFFSET replicas, laid out
         # hash-scattered on o_custkey (random wrt o_orderkey — every
@@ -1135,20 +1053,6 @@ def main() -> None:
                 "flat within ~20 ms of the raw scan_pruned probe, so the "
                 "automatic-pushdown pipeline adds bounded planning overhead "
                 "regardless of table growth."
-            )
-        if "lake_dpp_probe" in results:
-            r = results["lake_dpp_probe"]
-            lines.append("")
-            lines.append(
-                "The `lake_dpp_probe` row times a star query whose ONLY "
-                "predicate is a fixed dim-side name prefix, over a "
-                "custkey-clustered fact growing 1→10x by key-offset "
-                "replicas (the matching keys live in replica 0 alone); "
-                "the engine derives the surviving join-key set from the "
-                f"dim subplan and reads {r['files_read']} of "
-                f"{r['files_total']} fact files at mult {MULTS} — files "
-                "read track the dim predicate's selectivity, not the "
-                "fact, which is the dynamic-file-pruning claim under test."
             )
         if "lake_bloom_probe" in results:
             r = results["lake_bloom_probe"]
